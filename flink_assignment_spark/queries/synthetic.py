@@ -966,6 +966,7 @@ FROM toks GROUP BY 1, 2
 """
 
 
+# Registry order is definition order: the reference-parity queries first.
 REGISTRY: dict[str, QuerySpec] = {
     "q01_filter_project": QuerySpec(q01_filter_project, Q01_SQL),
     "q02_explode_filter": QuerySpec(q02_explode_filter, Q02_SQL),
@@ -7820,61 +7821,3 @@ FROM documents GROUP BY 1
 
 
 REGISTRY.update({"q157_url_dedup": QuerySpec(q157_url_dedup, _q157_oracle())})
-
-
-# ------------------------------------------------------------------------
-# Registry ordering contract: the driver's correctness harness records
-# at most 50 entries per round, in registry order — so the order IS the
-# driver window. Layout (see queries/_ledger.py::rotated_order):
-#   [0, 10)  q01..q09 (both q03 forms) — never rotated out; they are
-#            the reference-parity signal
-#   next     oracle-backed queries with NO green driver row in ANY
-#            prior round, or whose implementing code CHANGED since
-#            their last green row (source-hash drift vs the
-#            tools/query_source_hashes.json snapshot — r12 judge: the
-#            rotation was blind to code changes and rotated q16/q122
-#            out in the round their kernels changed)
-#   next     the ROWS-ONLY band — up to 5 rows-only queries, stalest
-#            external rows-only confirmation first (r14 judge: 12 of
-#            them had never been executed by the driver at all; the
-#            spark_rows>0 + schema record is their only external
-#            evidence, so it gets reserved slots like the stale quota)
-#   fill     previously-green oracle queries up to slot 50, STALEST
-#            LAST-GREEN ROUND FIRST (then by name), so the external
-#            ledger re-confirms the oldest rows every round
-#   tail     remaining oracle queries (each still exact-row-checked by
-#            tests/test_synthetic_queries.py every CI pass), then
-#            remaining rows-only queries (covered by pytest accuracy/
-#            determinism/recall harnesses instead)
-# The last-green ledger is DERIVED from the CORRECTNESS_r*.json files
-# in the repo root at import time (r12 judge: the hand-transcribed
-# predecessor stalled silently when a round forgot to bump it); the
-# source-hash snapshot auto-refreshes on the first import after a new
-# CORRECTNESS round lands (refresh_snapshot_if_new_round — r13 judge:
-# the manual tools/update_query_hashes.py step was forgettable and
-# forgetting it crowded the stalest rows out of the window).
-from ._ledger import (
-    changed_queries,
-    derive_last_green,
-    derive_rows_only_seen,
-    refresh_snapshot_if_new_round,
-    rotated_order,
-)
-
-_REFERENCE_WINDOW = [
-    "q01_filter_project", "q02_explode_filter", "q03_keyed_count",
-    "q03_running_count", "q04_keyed_sum", "q05_tumbling_daily",
-    "q06_sliding_windows", "q07_daily_summary_having",
-    "q08_interval_join_weekly", "q09_followed_by",
-]
-_LAST_GREEN = derive_last_green()
-refresh_snapshot_if_new_round(REGISTRY)
-_FORCED = changed_queries(REGISTRY)
-_rotated = rotated_order(
-    REGISTRY,
-    _LAST_GREEN,
-    _REFERENCE_WINDOW,
-    _FORCED,
-    rows_only_seen=derive_rows_only_seen(),
-)
-REGISTRY = {n: REGISTRY[n] for n in _rotated}

@@ -129,30 +129,9 @@ def test_vec_repr_matches_duckdb_on_adversarial_values(spark):
     assert parts == [100000, 200000, 300000, 2675000]
 
 
-def test_driver_window_schemas_are_flat(spark):
-    """Every oracle-backed query in the driver's 50-query window must
-    emit a FLAT schema — no array/map/struct columns — because the
-    driver canonicalizes with pandas sort_values, which cannot sort
-    list-valued cells (r7: q58/q71 erred exactly this way)."""
-    from pyspark.sql import types as T
-
-    from flink_assignment_spark.queries.synthetic import REGISTRY
-
-    from .conftest import SF_DIR
-
-    window = [n for n, s in REGISTRY.items() if s.oracle is not None][:50]
-    assert len(window) == 50
-    bad = []
-    for name in window:
-        schema = REGISTRY[name].spark(spark, SF_DIR).schema
-        for f in schema.fields:
-            if isinstance(f.dataType, (T.ArrayType, T.MapType, T.StructType)):
-                bad.append(f"{name}.{f.name}: {f.dataType.simpleString()}")
-    assert not bad, f"driver-window queries with unsortable columns: {bad}"
-
-
 def test_oracle_output_dtypes_are_driver_safe():
-    """DuckDB-side twin of the flat-schema guard: DESCRIBE every
+    """DuckDB-side twin of the flat-schema check in
+    test_synthetic_queries.py::test_query_matches_oracle: DESCRIBE every
     oracle SQL in the registry and assert no output column is
     HUGEINT / DECIMAL / LIST / STRUCT / MAP. pandas renders HUGEINT
     (the natural result of SUM over BIGINT / SUM(CASE...)) as

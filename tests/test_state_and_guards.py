@@ -262,99 +262,6 @@ def test_bloom_empty_probe_flags_nothing(spark):
     assert out[0].n_contaminated_shingles == 0 and not out[0].contaminated
 
 
-# ------------------------------------------------- rotation ledger (derived)
-
-
-def test_derived_ledger_reorders_fill_on_new_green_round(tmp_path):
-    """The last-green ledger is computed from CORRECTNESS_r*.json at
-    import time (r12 judge: the hand-transcribed dict silently stalled
-    the rotation when a round forgot to bump it) — dropping a new green
-    round's file must reorder the fill with no code change."""
-    import json
-    from dataclasses import dataclass
-
-    from flink_assignment_spark.queries._ledger import (
-        derive_last_green,
-        rotated_order,
-    )
-
-    @dataclass
-    class Spec:
-        oracle: str | None
-
-    reg = {
-        "ref_a": Spec("SELECT 1"),
-        "old_1": Spec("SELECT 1"),
-        "old_2": Spec("SELECT 1"),
-        "fresh": Spec("SELECT 1"),
-        "never": Spec("SELECT 1"),
-        "rows_only": Spec(None),
-    }
-    green = {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
-    (tmp_path / "CORRECTNESS_r01.json").write_text(
-        json.dumps({"ref_a": green, "old_1": green, "old_2": green, "fresh": green})
-    )
-    (tmp_path / "CORRECTNESS_r02.json").write_text(json.dumps({"fresh": green}))
-    lg = derive_last_green(str(tmp_path))
-    assert lg == {"ref_a": 1, "old_1": 1, "old_2": 1, "fresh": 2}
-    order = rotated_order(reg, lg, ["ref_a"])
-    # never-green first; then the fill stalest-first: old_1/old_2 (r1)
-    # before fresh (r2); rows-only last
-    assert order == ["ref_a", "never", "old_1", "old_2", "fresh", "rows_only"]
-    # a NEW green round for old_1 demotes it behind old_2 — the file
-    # alone reorders the fill
-    (tmp_path / "CORRECTNESS_r03.json").write_text(json.dumps({"old_1": green}))
-    order2 = rotated_order(reg, derive_last_green(str(tmp_path)), ["ref_a"])
-    assert order2 == ["ref_a", "never", "old_2", "fresh", "old_1", "rows_only"]
-    # a red row (hash mismatch) must NOT advance the ledger
-    red = {**green, "hash_match": False}
-    (tmp_path / "CORRECTNESS_r04.json").write_text(json.dumps({"old_2": red}))
-    assert derive_last_green(str(tmp_path))["old_2"] == 1
-
-
-def test_changed_code_queries_are_forced_into_window():
-    """A query whose implementation hash drifted from the snapshot is
-    treated as needs-green and force-included ahead of the fill (r12
-    judge: the rotation was blind to code changes and rotated q16/q122
-    out in the round their kernels changed)."""
-    from dataclasses import dataclass
-
-    from flink_assignment_spark.queries._ledger import rotated_order
-
-    @dataclass
-    class Spec:
-        oracle: str | None
-
-    reg = {"a": Spec("x"), "b": Spec("x"), "c": Spec("x")}
-    lg = {"a": 5, "b": 3, "c": 4}
-    # without forcing, the stalest (b) fills first
-    assert rotated_order(reg, lg, []) == ["b", "c", "a"]
-    # forcing a puts it ahead of the non-quota fill despite being
-    # newest-green (the stale-quota band keeps priority — see
-    # test_stale_quota_floor_survives_oversized_forced_set)
-    assert rotated_order(reg, lg, [], forced={"a"}, stale_quota=1) == [
-        "b",
-        "a",
-        "c",
-    ]
-
-
-def test_live_snapshot_matches_live_registry_keys():
-    """The committed snapshot covers exactly the registry (a new query
-    without a snapshot row is fine — it is needs-green anyway — but a
-    stale snapshot naming dead queries means the update tool was not
-    run at round start)."""
-    import json
-
-    from flink_assignment_spark.queries._ledger import SNAPSHOT_PATH
-    from flink_assignment_spark.queries.synthetic import REGISTRY
-
-    with open(SNAPSHOT_PATH) as f:
-        snap = json.load(f)
-    assert set(snap) <= set(REGISTRY)
-    assert all("hash" in v for v in snap.values())
-
-
 def test_bloom_artifact_save_load_roundtrip(spark, tmp_path):
     """The Bloom gate's (bitmap, n_bits) artifact round-trips
     byte-exactly through storage — completing the save/load trio every
@@ -387,156 +294,3 @@ def test_bloom_artifact_save_load_roundtrip(spark, tmp_path):
         f.truncate(32)
     with pytest.raises(ValueError, match="corrupt"):
         load_bloom(path)
-
-
-def test_never_green_outranks_forced_in_window():
-    """Within the needs-green band, a query with NO green history ever
-    sorts before a changed-code re-green: the forced query was
-    externally verified last round (and pytest covers its current
-    code), the never-green one has no driver row at all — when the
-    50-slot truncation bites, the never-green must survive."""
-    from dataclasses import dataclass
-
-    from flink_assignment_spark.queries._ledger import rotated_order
-
-    @dataclass
-    class Spec:
-        oracle: str | None
-
-    reg = {"zz_new": Spec("x"), "aa_forced": Spec("x"), "fill": Spec("x")}
-    lg = {"aa_forced": 5, "fill": 4}
-    assert rotated_order(reg, lg, [], forced={"aa_forced"}, stale_quota=0) == [
-        "zz_new",
-        "aa_forced",
-        "fill",
-    ]
-
-
-def test_stale_quota_floor_survives_oversized_forced_set():
-    """The stale-quota band sits BEFORE the force-includes (r13 judge
-    ask): even when a kernel change forces more queries than the
-    window holds, the stalest previously-green rows keep their
-    reserved slots instead of being crowded past the driver's
-    truncation (the q92/q95–q99 starvation, stuck at last-green r7
-    for six rounds)."""
-    from dataclasses import dataclass
-
-    from flink_assignment_spark.queries._ledger import rotated_order
-
-    @dataclass
-    class Spec:
-        oracle: str | None
-
-    # 40 forced queries + 5 stale ones; a 3-slot quota must surface
-    # the 3 stalest ahead of ALL forced entries
-    reg = {f"forced_{i:02d}": Spec("x") for i in range(40)}
-    reg.update({f"stale_{i}": Spec("x") for i in range(5)})
-    lg = {f"forced_{i:02d}": 9 for i in range(40)}
-    lg.update({f"stale_{i}": i + 1 for i in range(5)})  # stale_0 oldest
-    forced = {f"forced_{i:02d}" for i in range(40)}
-    order = rotated_order(reg, lg, [], forced=forced, stale_quota=3)
-    assert order[:3] == ["stale_0", "stale_1", "stale_2"]
-    assert set(order[3:43]) == forced          # then the forced band
-    assert order[43:] == ["stale_3", "stale_4"]  # rest of the fill
-    # never-green still outranks the quota band
-    reg["zz_never"] = Spec("x")
-    order2 = rotated_order(reg, lg, [], forced=forced, stale_quota=3)
-    assert order2[0] == "zz_never"
-    assert order2[1:4] == ["stale_0", "stale_1", "stale_2"]
-
-
-def test_rows_only_band_rotates_into_window():
-    """Rows-only queries (no oracle) get a reserved band ahead of the
-    force-includes (r14 judge ask #3): a driver row with spark_rows>0
-    is their ONLY external evidence, so up to rows_only_quota of them
-    — never-driver-executed first, then stalest-seen — must survive
-    the 50-slot truncation even when a kernel change forces many
-    oracle queries. The rest still tail."""
-    from dataclasses import dataclass
-
-    from flink_assignment_spark.queries._ledger import rotated_order
-
-    @dataclass
-    class Spec:
-        oracle: str | None
-
-    reg = {f"forced_{i:02d}": Spec("x") for i in range(40)}
-    lg = {f"forced_{i:02d}": 9 for i in range(40)}
-    forced = set(lg)
-    reg.update({f"ro_{i}": Spec(None) for i in range(5)})
-    seen = {"ro_0": 3, "ro_1": 1}  # ro_2..ro_4 never driver-executed
-    order = rotated_order(
-        reg, lg, [], forced=forced, stale_quota=0,
-        rows_only_seen=seen, rows_only_quota=2,
-    )
-    # never-executed rows-only first (by name), before every forced row
-    assert order[:2] == ["ro_2", "ro_3"]
-    assert set(order[2:42]) == forced
-    # the rest of the rows-only set tails, stalest-seen first
-    assert order[42:] == ["ro_4", "ro_1", "ro_0"]
-    # once all have been seen, the stalest-seen rotates in
-    seen_all = {f"ro_{i}": 10 - i for i in range(5)}
-    order2 = rotated_order(
-        reg, lg, [], forced=forced, stale_quota=0,
-        rows_only_seen=seen_all, rows_only_quota=2,
-    )
-    assert order2[:2] == ["ro_4", "ro_3"]
-
-
-def _toy_query(spark, sf_dir):
-    return None
-
-
-def test_snapshot_auto_refresh_on_new_round(tmp_path):
-    """refresh_snapshot_if_new_round fires exactly once per new
-    CORRECTNESS round: it re-records (round, hash) for every entry,
-    and a second call (no newer round) is a no-op — the mechanized
-    replacement for the manual round-start tools/update_query_hashes
-    step."""
-    import json
-    from dataclasses import dataclass
-
-    from flink_assignment_spark.queries._ledger import (
-        refresh_snapshot_if_new_round,
-    )
-
-    @dataclass
-    class Spec:
-        oracle: str | None
-        spark: object = _toy_query
-
-    reg = {"qa": Spec("SELECT 1"), "qb": Spec("SELECT 2")}
-    snap_path = tmp_path / "snap.json"
-    snap_path.write_text(
-        json.dumps({"qa": {"round": 1, "hash": "stale"}, "qb": {"round": None, "hash": "x"}})
-    )
-    green = {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
-    (tmp_path / "CORRECTNESS_r02.json").write_text(json.dumps({"qa": green, "qb": green}))
-    assert refresh_snapshot_if_new_round(
-        reg, path=str(snap_path), repo_root=str(tmp_path)
-    )
-    snap = json.loads(snap_path.read_text())
-    assert snap["qa"]["round"] == 2 and snap["qb"]["round"] == 2
-    assert snap["qa"]["hash"] != "stale" and len(snap["qa"]["hash"]) == 32
-    # both entries hash the same toy query fn + different oracles
-    assert snap["qa"]["hash"] != snap["qb"]["hash"]
-    # idempotent until the NEXT round file lands
-    assert not refresh_snapshot_if_new_round(
-        reg, path=str(snap_path), repo_root=str(tmp_path)
-    )
-    (tmp_path / "CORRECTNESS_r03.json").write_text(json.dumps({"qb": green}))
-    # simulate a CHANGED query that was force-included but truncated
-    # out of r03's 50-slot window (never re-verified): its snapshot
-    # row must survive the refresh verbatim so the hash drift keeps
-    # forcing it (r14 judge medium flag — a blanket re-stamp erased
-    # its needs-green status even though its green round tested older
-    # code)
-    snap = json.loads(snap_path.read_text())
-    snap["qa"]["hash"] = "drifted-but-not-reverified"
-    snap_path.write_text(json.dumps(snap))
-    assert refresh_snapshot_if_new_round(
-        reg, path=str(snap_path), repo_root=str(tmp_path)
-    )
-    snap = json.loads(snap_path.read_text())
-    assert snap["qb"]["round"] == 3 and snap["qa"]["round"] == 2
-    assert snap["qa"]["hash"] == "drifted-but-not-reverified"

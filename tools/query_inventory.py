@@ -26,10 +26,9 @@ def main() -> None:
         "the algorithmic guarantee pytest-verified (recall bound,",
         "rank-error bound, determinism) as noted in the docstring.",
         "",
-        "The driver externally re-confirms a rotating 50-row window per round;",
-        "pytest exact-row-checks EVERY oracle-backed row on every CI pass",
-        'regardless of the window (see README "Correctness" for the split and',
-        "`queries/_ledger.py` for the rotation order).",
+        "pytest exact-row-checks EVERY oracle-backed query on every CI pass",
+        '(see README "Correctness"). Rows are in registry order, which is',
+        "definition order: the reference-parity queries first.",
         "",
         "| query | check | summary |",
         "|---|---|---|",
