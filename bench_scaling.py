@@ -111,7 +111,6 @@ def stream_lsh_sweep(
     scales: list[int],
     n_batches: int = 10,
     max_state_bucket: int = 50,
-    backend_name: str = "parquet",
     compact_every: int = 0,
 ) -> dict:
     """Per-batch latency of the incremental MinHash-LSH detector as
@@ -126,13 +125,9 @@ def stream_lsh_sweep(
 
     from pyspark.sql import functions as F
 
+    from flink_assignment_spark.streaming import _state
     from flink_assignment_spark.streaming.lsh_stream import merge_lsh_batch
 
-    backend = None
-    if backend_name == "manifest":
-        from flink_assignment_spark.streaming._state import ManifestStateBackend
-
-        backend = ManifestStateBackend()
     out = {}
     for n in scales:
         base = f"/tmp/fas_docscale_{n}"
@@ -161,20 +156,18 @@ def stream_lsh_sweep(
             t0 = time.monotonic()
             merge_lsh_batch(
                 batch, b, state_dir,
-                max_state_bucket=max_state_bucket, backend=backend,
+                max_state_bucket=max_state_bucket,
                 compact_every=compact_every or None,
             )
             per_batch.append(round(time.monotonic() - t0, 2))
             if _compacted_batch(state_dir) == b:
                 compacted_at.append(b)
         from flink_assignment_spark.streaming._detector import read_pairs
-        from flink_assignment_spark.streaming._state import DEFAULT_BACKEND
 
-        be = backend or DEFAULT_BACKEND
-        st = be.read(spark, os.path.join(state_dir, "buckets"), "pt")
+        st = _state.read(spark, os.path.join(state_dir, "buckets"), "pt")
         state_rows = st.count() if st is not None else 0
         n_pairs = read_pairs(
-            spark, state_dir, "doc_a long, doc_b long, est_jaccard double", backend
+            spark, state_dir, "doc_a long, doc_b long, est_jaccard double"
         ).count()
         out[str(n)] = {
             "per_batch_sec": per_batch,
@@ -1191,12 +1184,6 @@ def main() -> None:
         "stream-lsh sweep (0 = never)",
     )
     ap.add_argument(
-        "--state-backend",
-        choices=["parquet", "manifest"],
-        default="parquet",
-        help="state backend for the stream-lsh sweep (seam comparison)",
-    )
-    ap.add_argument(
         "--substring-family", type=int, metavar="N_DOCS",
         help="run ONLY the q88/q95/q104 shared-index family point at "
         "N_DOCS documents (shared vs independent index builds)",
@@ -1405,12 +1392,10 @@ def main() -> None:
             json.dumps(
                 {
                     "metric": "streaming-LSH per-batch latency vs corpus state",
-                    "backend": args.state_backend,
                     "stream_lsh": stream_lsh_sweep(
                         spark,
                         args.doc_scales,
                         n_batches=args.n_batches,
-                        backend_name=args.state_backend,
                         compact_every=args.compact_every,
                     ),
                 }

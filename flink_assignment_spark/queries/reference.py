@@ -17,6 +17,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.scalar import day_str, file_extension, repo_from_url
+from ..operators.cep import followed_by
+from ..operators.interval_join import interval_join
 
 def EVENT_TS():
     """Event-time column (README.md:112). Function, not module constant:
@@ -207,9 +209,10 @@ def question_eight(commits: DataFrame, geo: DataFrame) -> DataFrame:
     interval join (reference :249-291).
 
     Join condition (``:274-277``): geo.createdAt ∈
-    [commit_ts − 1h, commit_ts + 30m], equi on sha. Catalyst plans the
-    equi-part as a broadcast/sort-merge join and applies the band as a
-    post-join filter; in streaming the band bounds join state.
+    [commit_ts − 1h, commit_ts + 30m], equi on sha
+    (:func:`~..operators.interval_join.interval_join`). Catalyst plans
+    the equi-part as a broadcast/sort-merge join and applies the band
+    as a post-join filter; in streaming the band bounds join state.
 
     Window timestamp: Flink's interval join assigns
     max(left_ts, right_ts) to the joined element, which then feeds the
@@ -221,12 +224,8 @@ def question_eight(commits: DataFrame, geo: DataFrame) -> DataFrame:
         .select("sha", "commit_ts", F.col("f.changes").alias("changes"))
     )
     geo_ev = geo.select("sha", F.col("createdAt").alias("geo_ts"), "continent")
-    joined = java_files.join(
-        geo_ev,
-        (java_files.sha == geo_ev.sha)
-        & (F.col("geo_ts") >= F.col("commit_ts") - F.expr("INTERVAL 1 HOUR"))
-        & (F.col("geo_ts") <= F.col("commit_ts") + F.expr("INTERVAL 30 MINUTES")),
-        "inner",
+    joined = interval_join(
+        java_files, geo_ev, ["sha"], "commit_ts", "geo_ts", -3600, 1800
     ).select(
         "continent",
         "changes",
@@ -246,8 +245,9 @@ def question_nine(commits: DataFrame) -> DataFrame:
     .within(Time.days(1))`` keyed by (repo, filename): each "added"
     event opens a partial match that pairs with the FIRST subsequent
     "removed" within 1 day (relaxed contiguity, no-skip). Batch
-    equivalent: band self-join added×removed, keep min(removed_ts) per
-    added event, emit (repo, filename) per match.
+    equivalent (:func:`~..operators.cep.followed_by`): band self-join
+    added×removed, keep min(removed_ts) per added event, emit
+    (repo, filename) per match.
     """
     base = (
         commits.select(
@@ -258,20 +258,7 @@ def question_nine(commits: DataFrame) -> DataFrame:
         .filter(F.col("f.filename").isNotNull())
         .select("repo", F.col("f.filename").alias("filename"), F.col("f.status").alias("status"), "ts")
     )
-    added = base.filter(F.col("status") == "added").select(
-        "repo", "filename", F.col("ts").alias("added_ts")
-    )
-    removed = base.filter(F.col("status") == "removed").select(
-        "repo", "filename", F.col("ts").alias("removed_ts")
-    )
-    matches = (
-        added.join(removed, ["repo", "filename"])
-        .filter(
-            (F.col("removed_ts") > F.col("added_ts"))
-            & (F.col("removed_ts") <= F.col("added_ts") + F.expr("INTERVAL 1 DAY"))
-        )
-        # first-match semantics: each added event pairs with its first removal
-        .groupBy("repo", "filename", "added_ts")
-        .agg(F.min("removed_ts").alias("removed_ts"))
+    matches = followed_by(
+        base, ["repo", "filename"], "ts", "status", "added", "removed", 86400
     )
     return matches.select("repo", "filename")

@@ -68,9 +68,8 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import _state
 from ._state import (
-    DEFAULT_BACKEND,
-    ParquetStateBackend,
     applied_batch,
     commit_marker,
 )
@@ -160,21 +159,14 @@ def _key_eq(left: str, right: str, key_cols: list[str]) -> Column:
 
 
 def _read_tombs(
-    spark: SparkSession,
-    state_dir: str,
-    key_cols: list[str],
-    backend: ParquetStateBackend | None = None,
+    spark: SparkSession, state_dir: str, key_cols: list[str]
 ) -> DataFrame | None:
-    df = (backend or DEFAULT_BACKEND).read(spark, tombs_path(state_dir))
+    df = _state.read(spark, tombs_path(state_dir))
     return None if df is None else df.select(*key_cols).distinct()
 
 
-def _read_doc_tombs(
-    spark: SparkSession,
-    state_dir: str,
-    backend: ParquetStateBackend | None = None,
-) -> DataFrame | None:
-    df = (backend or DEFAULT_BACKEND).read(spark, doc_tombs_path(state_dir))
+def _read_doc_tombs(spark: SparkSession, state_dir: str) -> DataFrame | None:
+    df = _state.read(spark, doc_tombs_path(state_dir))
     return None if df is None else df.select("doc_id").distinct()
 
 
@@ -192,7 +184,6 @@ def erase_docs(
     doc_ids,
     key_cols: list[str],
     payload_col: str,
-    backend: ParquetStateBackend | None = None,
 ) -> None:
     """Right-to-be-forgotten cascade for the detector's OWN state (r14
     judge ask #7): the relational erasure (operators/erasure.py)
@@ -225,12 +216,11 @@ def erase_docs(
     ids = sorted({int(d) for d in doc_ids})
     if not ids:
         return
-    backend = backend or DEFAULT_BACKEND
     tomb_df = spark.createDataFrame([(d,) for d in ids], "doc_id long")
-    backend.append(tomb_df.coalesce(1), doc_tombs_path(state_dir), None)
+    _state.append(tomb_df.coalesce(1), doc_tombs_path(state_dir), None)
 
     bpath = buckets_path(state_dir)
-    full = backend.read(spark, bpath, "pt")
+    full = _state.read(spark, bpath, "pt")
     if full is not None:
         hit = [
             int(r.pt)
@@ -243,25 +233,16 @@ def erase_docs(
             keep = full.filter(
                 F.col("pt").isin(hit) & ~F.col("doc_id").isin(ids)
             ).select(*key_cols, "doc_id", payload_col, "pt")
-            backend.fold(keep, bpath, "pt", hit)
-            # default backend: every partition emptied → drop the
-            # bare-_SUCCESS dir (unreadable as parquet), the
-            # compact_state guard
-            if os.path.isdir(bpath) and os.path.exists(
-                os.path.join(bpath, "_SUCCESS")
-            ) and not any(e.startswith("pt=") for e in os.listdir(bpath)):
-                import shutil
-
-                shutil.rmtree(bpath)
+            _state.fold(keep, bpath, "pt", hit)
 
     ppath = pairs_path(state_dir)
-    cur = backend.read(spark, ppath)
+    cur = _state.read(spark, ppath)
     if cur is not None:
         hit_any = cur.filter(
             F.col("doc_a").isin(ids) | F.col("doc_b").isin(ids)
         ).limit(1).count()
         if hit_any:
-            backend.replace(
+            _state.replace(
                 cur.filter(
                     ~F.col("doc_a").isin(ids) & ~F.col("doc_b").isin(ids)
                 ),
@@ -281,7 +262,6 @@ def merge_detector_batch(
     score_keep: Callable[[Column], Column] | None = None,
     max_state_bucket: int | None = None,
     n_pt: int | None = None,
-    backend: ParquetStateBackend | None = None,
     compact_every: int | None = None,
 ) -> None:
     """Fold one micro-batch of bucket ``rows`` — ``(key cols…, doc_id,
@@ -304,7 +284,6 @@ def merge_detector_batch(
     (SCALING.md's measured compaction economics)."""
     if batch_id <= applied_batch(state_dir):
         return
-    backend = backend or DEFAULT_BACKEND
     spark = rows.sparkSession
     bpath = buckets_path(state_dir)
     rows = with_pt(
@@ -318,14 +297,14 @@ def merge_detector_batch(
         commit_marker(state_dir, batch_id)
         return
 
-    tombs = _read_tombs(spark, state_dir, key_cols, backend)
+    tombs = _read_tombs(spark, state_dir, key_cols)
     if tombs is not None:
         # members landing in an already-saturated bucket emit nothing
         # and are never stored
         rows_live = rows.join(F.broadcast(tombs), key_cols, "left_anti").cache()
     else:
         rows_live = rows
-    dtombs = _read_doc_tombs(spark, state_dir, backend)
+    dtombs = _read_doc_tombs(spark, state_dir)
     if dtombs is not None:
         # ERASED docs (right-to-be-forgotten, erase_docs): late rows
         # for an erased subject are dropped at the gate — they must
@@ -337,7 +316,7 @@ def merge_detector_batch(
         if prev is not rows:
             prev.unpersist()
 
-    full_state = backend.read(spark, bpath, "pt")
+    full_state = _state.read(spark, bpath, "pt")
     if full_state is not None:
         # one cached read of the touched partitions feeds the candidate
         # join and the saturation count
@@ -392,7 +371,7 @@ def merge_detector_batch(
     if pairs.count():
         # bounded file count per batch (the append table is read-only
         # until the analysis pass; no need for one file per shuffle task)
-        backend.append(pairs.coalesce(8), pairs_path(state_dir), None)
+        _state.append(pairs.coalesce(8), pairs_path(state_dir), None)
     pairs.unpersist()
 
     # fold = DELTA APPEND of the batch's rows only (O(batch), never
@@ -433,7 +412,7 @@ def merge_detector_batch(
         )
         hot = totals.filter(F.col("n") > max_state_bucket).select(*key_cols).cache()
         if hot.count():
-            backend.append(hot.coalesce(1), tombs_path(state_dir), None)
+            _state.append(hot.coalesce(1), tombs_path(state_dir), None)
             fold_out = fold_rows.join(F.broadcast(hot), key_cols, "left_anti")
         hot.unpersist()
 
@@ -446,7 +425,7 @@ def merge_detector_batch(
         fold_out = fold_out.repartition(F.col("pt"))
         # never create a bare-_SUCCESS buckets dir (unreadable as parquet)
         if fold_out.limit(1).count():
-            backend.append(fold_out, bpath, "pt")
+            _state.append(fold_out, bpath, "pt")
         _mark_appended(state_dir, batch_id)
     fold_rows.unpersist()
     if state is not None:
@@ -459,7 +438,7 @@ def merge_detector_batch(
         compact_every is not None
         and batch_id - _compacted_batch(state_dir) >= compact_every
     ):
-        compact_state(spark, state_dir, key_cols, payload_col, backend)
+        compact_state(spark, state_dir, key_cols, payload_col)
         _mark_compacted(state_dir, batch_id)
 
 
@@ -467,7 +446,6 @@ def read_bucket_state(
     spark: SparkSession,
     state_dir: str,
     key_cols: list[str],
-    backend: ParquetStateBackend | None = None,
     key_types: list[str] | None = None,
     payload_col: str | None = None,
     payload_type: str | None = None,
@@ -483,8 +461,7 @@ def read_bucket_state(
     identically on a fresh state (r7 ADVICE: the old fallback typed
     every key string and omitted payload/pt, diverging from the
     non-empty return)."""
-    backend = backend or DEFAULT_BACKEND
-    state = backend.read(spark, buckets_path(state_dir), "pt")
+    state = _state.read(spark, buckets_path(state_dir), "pt")
     if state is None:
         kt = key_types or ["string"] * len(key_cols)
         fields = [f"{k} {t}" for k, t in zip(key_cols, kt)] + ["doc_id long"]
@@ -492,10 +469,10 @@ def read_bucket_state(
             fields.append(f"{payload_col} {payload_type or 'string'}")
         fields.append("pt int")
         return spark.createDataFrame([], ", ".join(fields))
-    tombs = _read_tombs(spark, state_dir, key_cols, backend)
+    tombs = _read_tombs(spark, state_dir, key_cols)
     if tombs is not None:
         state = state.join(F.broadcast(tombs), key_cols, "left_anti")
-    dtombs = _read_doc_tombs(spark, state_dir, backend)
+    dtombs = _read_doc_tombs(spark, state_dir)
     if dtombs is not None:
         # erased docs' physical rows stay until the purge/compaction
         # completes — never observable
@@ -504,11 +481,7 @@ def read_bucket_state(
 
 
 def compact_state(
-    spark: SparkSession,
-    state_dir: str,
-    key_cols: list[str],
-    payload_col: str,
-    backend: ParquetStateBackend | None = None,
+    spark: SparkSession, state_dir: str, key_cols: list[str], payload_col: str
 ) -> None:
     """Maintenance (the lakehouse OPTIMIZE analogue): rewrite every
     bucket partition once — merging per-batch delta files, dropping
@@ -517,42 +490,27 @@ def compact_state(
     out-of-band on a schedule, or let the fold trigger it in-band via
     ``merge_detector_batch(compact_every=N)`` (measured flat at
     ~4 s/batch amortized on a 50-batch 500k sweep — SCALING.md)."""
-    from ._state import fold_state
-
-    backend = backend or DEFAULT_BACKEND
     bpath = buckets_path(state_dir)
-    full = backend.read(spark, bpath, "pt")
+    full = _state.read(spark, bpath, "pt")
     if full is None:
         return
-    live = read_bucket_state(spark, state_dir, key_cols, backend).select(
+    live = read_bucket_state(spark, state_dir, key_cols).select(
         *key_cols, "doc_id", payload_col, "pt"
     ).distinct()
     all_pts = [int(r.pt) for r in full.select("pt").distinct().collect()]
-    fold_state(live, bpath, "pt", all_pts, backend)
-    # default backend only: everything was masked → drop the now-empty
-    # (unreadable) plain-parquet table; tombs stay, so saturation
-    # remains sticky. The manifest backend's read handles empty parts.
-    if os.path.isdir(bpath) and os.path.exists(
-        os.path.join(bpath, "_SUCCESS")
-    ) and not any(e.startswith("pt=") for e in os.listdir(bpath)):
-        import shutil
-
-        shutil.rmtree(bpath)
+    # everything masked → the fold drops the emptied table; tombs stay,
+    # so saturation remains sticky
+    _state.fold(live, bpath, "pt", all_pts)
 
 
-def read_pairs(
-    spark: SparkSession,
-    state_dir: str,
-    schema: str,
-    backend: ParquetStateBackend | None = None,
-) -> DataFrame:
+def read_pairs(spark: SparkSession, state_dir: str, schema: str) -> DataFrame:
     """Accumulated distinct scored pairs; a stream that has processed
     batches but never collided creates no pairs/ table — a legitimate
     empty result."""
-    df = (backend or DEFAULT_BACKEND).read(spark, pairs_path(state_dir))
+    df = _state.read(spark, pairs_path(state_dir))
     if df is None:
         return spark.createDataFrame([], schema)
-    dtombs = _read_doc_tombs(spark, state_dir, backend)
+    dtombs = _read_doc_tombs(spark, state_dir)
     if dtombs is not None:
         # pairs mentioning an erased doc are masked even in the
         # erase_docs crash window before the pairs rewrite lands

@@ -1,55 +1,43 @@
-"""Shared plain-parquet state protocol for foreachBatch sinks.
+"""Shared plain-parquet state store for foreachBatch sinks.
 
 One copy of the mechanisms every incremental sink here needs: the
 at-least-once replay marker, the staging-write → per-partition-swap
-fold, the bounded delta append, and the backend seam that lets a
-transactional table format replace all of it. A fix to any crash
-contract lands in every sink at once instead of drifting across
-verbatim copies.
+fold, the bounded delta append, and the whole-table replace. A fix to
+any crash contract lands in every sink at once instead of drifting
+across verbatim copies.
 
-Backend seam (the MERGE contract)
----------------------------------
+The store (the MERGE contract)
+------------------------------
 
-Every sink folds state exclusively through a :class:`StateBackend`,
-so a deployment backed by a transactional table format (Delta Lake /
-Apache Iceberg) swaps one object instead of touching detector / CC /
-novelty logic. A replacement backend must guarantee, for each method:
+Every sink reaches its table state through five module functions,
+called as ``_state.fold(...)`` etc. so a crash-injection test can
+patch one name:
 
 - ``fold(out, table, part_col, touched)`` — REPLACE the contents of
   the ``touched`` partitions with ``out``'s rows (a partition absent
   from ``out`` becomes empty). ``out`` MUST contain rows only for
-  partitions in ``touched`` — both backends raise ``ValueError`` on a
-  violation, identically (r7 ADVICE: they used to diverge, one
-  silently dropping the extra partition's staged rows, the other
-  silently replacing that partition's live files). Equivalent MERGE:
-  delete-where ``part_col IN touched`` + insert, in ONE atomic
-  commit. Atomicity may be per-partition at minimum (this parquet
-  stand-in's level): callers' folds are SET UNIONS, so a replay over
-  a partially-applied fold must converge — the backend must never
-  expose a partition in a half-written state (readers see old or
-  new, nothing else).
+  partitions in ``touched``; a violation raises ``ValueError`` before
+  anything moves. Equivalent MERGE: delete-where ``part_col IN
+  touched`` + insert. Atomicity is per-partition: callers' folds are
+  SET UNIONS, so a replay over a partially-applied fold converges, and
+  no partition is ever exposed half-written (readers see old or new).
+  A fold that leaves no partition at all DROPS the table, so the next
+  ``read`` returns ``None`` and the next fold starts fresh.
 - ``append(out, table, part_col)`` — INSERT ``out``'s rows. Replays
   may re-append; callers either dedupe at read or pre-anti-join, so
-  duplicate rows must be tolerated, not deduped by the backend.
-- ``read(spark, table, part_col)`` — return the table's committed
-  contents as a DataFrame (partition column included when
-  ``part_col`` is given), or ``None`` when the table has never been
-  committed. Reads must see only committed data (read isolation);
-  `_SUCCESS`-style visibility markers are the plain-parquet
-  approximation of a table snapshot, and
-  :class:`ManifestStateBackend` shows the real thing — an atomic
-  manifest swap giving snapshot isolation across ALL partitions at
-  once (a crashed fold is entirely invisible, never half-visible).
+  duplicate rows are tolerated, not deduped here.
+- ``read(spark, table, part_col)`` — the table's committed contents
+  as a DataFrame (partition column included when ``part_col`` is
+  given), or ``None`` when the table has never been committed or was
+  drained. The ``_SUCCESS`` marker is the visibility test.
 - ``replace(out, table, meta)`` — REPLACE the WHOLE table with
   ``out``'s rows, committing the small ``meta`` dict (e.g. the
   applied-batch marker) atomically WITH the data: after any crash,
   ``read``/``read_meta`` expose the old (data, meta) pair or the new
   one, never a mix. This is the fold for group-cardinality /
-  keeper-table state (mixture counts, the dedup-apply kept corpus)
-  whose production form is a MERGE INTO rewriting only touched
-  files; a whole-table rewrite is the honest plain-parquet stand-in.
+  keeper-table state (mixture counts, the dedup-apply kept corpus).
 - ``read_meta(table)`` — the ``meta`` dict committed with the
-  current snapshot, or ``None`` before any replace.
+  current table, or ``None`` before any replace.
 """
 
 from __future__ import annotations
@@ -152,17 +140,15 @@ def run_marker(checkpoint: str | None) -> str:
 
 
 def _check_int_parts(touched: list[int]) -> None:
-    """Seam contract: partition values are plain ints. Int values are
+    """Fold contract: partition values are plain ints. Int values are
     never escaped in Hive-style directory names, so the fold guards'
     raw ``part=<suffix>`` comparison is value-faithful; strings would
     need Spark's partition-path escaping (special chars, NULL →
-    ``__HIVE_DEFAULT_PARTITION__``) undone before comparing, and the
-    two backends could silently diverge on it. Enforced identically in
-    :func:`swap_partitions` and :meth:`ManifestStateBackend.fold`."""
+    ``__HIVE_DEFAULT_PARTITION__``) undone before comparing."""
     bad = [p for p in touched if not isinstance(p, int) or isinstance(p, bool)]
     if bad:
         raise TypeError(
-            f"state-backend partition values must be ints, got {bad!r} — "
+            f"state partition values must be ints, got {bad!r} — "
             "the fold guard compares raw directory suffixes and only int "
             "values are escape-free in partition paths"
         )
@@ -177,11 +163,15 @@ def swap_partitions(
     upsert on plain parquet (production: the same MERGE INTO through a
     transactional table format). Crash mid-swap leaves a prefix of the
     partitions updated; callers' folds must be set unions so a replay
-    converges. ``_SUCCESS`` is only created when data was written.
+    converges.
 
     A touched partition whose staging output is EMPTY (no src dir) has
     its existing dst directory removed — "touched" means "this is the
-    partition's new contents", including contents of zero rows.
+    partition's new contents", including contents of zero rows. When
+    that leaves no partition at all, the table directory goes too: a
+    bare ``_SUCCESS`` directory is unreadable as parquet, so the next
+    read would fail instead of returning ``None``. ``_SUCCESS`` is
+    removed first, so a crash mid-drop still reads as no table.
     ``touched`` values must be ints (see :func:`_check_int_parts`)."""
     _check_int_parts(touched)
     staging = table_path + ".staging"
@@ -201,7 +191,6 @@ def swap_partitions(
             f"touched: {sorted(extra)} (touched={sorted(map(str, touched))})"
         )
     os.makedirs(table_path, exist_ok=True)
-    wrote_any = False
     for p in touched:
         src = os.path.join(staging, f"{part_col}={p}")
         dst = os.path.join(table_path, f"{part_col}={p}")
@@ -209,10 +198,14 @@ def swap_partitions(
             shutil.rmtree(dst)
         if os.path.exists(src):
             os.rename(src, dst)
-            wrote_any = True
     shutil.rmtree(staging)
-    if wrote_any or os.listdir(table_path):
-        open(os.path.join(table_path, "_SUCCESS"), "a").close()
+    success = os.path.join(table_path, "_SUCCESS")
+    if any(e.startswith(f"{part_col}=") for e in os.listdir(table_path)):
+        open(success, "a").close()
+    else:
+        if os.path.exists(success):
+            os.remove(success)
+        shutil.rmtree(table_path)
 
 
 def append_rows(out: DataFrame, table_path: str, part_col: str | None) -> None:
@@ -229,28 +222,8 @@ def append_rows(out: DataFrame, table_path: str, part_col: str | None) -> None:
     w.parquet(table_path)
 
 
-def drop_if_drained(table_path: str, part_col: str = "bucket") -> None:
-    """Remove a partitioned state dir whose every partition was folded
-    away, leaving only a bare ``_SUCCESS`` marker — unreadable as
-    parquet, so the next ``read`` would crash instead of returning
-    None. One shared copy (r16 review: the k-anonymity and generalize
-    gates each carried a verbatim inline block, exactly the drift this
-    module exists to prevent). A no-op on the ManifestStateBackend's
-    layout (no ``_SUCCESS`` file), where an emptied table already
-    reads as None via its manifest."""
-    if (
-        os.path.isdir(table_path)
-        and os.path.exists(os.path.join(table_path, "_SUCCESS"))
-        and not any(
-            e.startswith(f"{part_col}=") for e in os.listdir(table_path)
-        )
-    ):
-        shutil.rmtree(table_path)
-
-
 def recover_replace(table_path: str) -> None:
-    """Heal a crash inside :meth:`ParquetStateBackend.replace`'s
-    two-rename swap. The swap is (1) rename the current table aside to
+    """Heal a crash inside :func:`replace`'s two-rename swap. The swap is (1) rename the current table aside to
     ``.old``, (2) rename staging in, (3) delete ``.old`` — so a
     leftover ``.old`` means either the crash hit between (1) and (2)
     (no live table: restore ``.old``) or between (2) and (3) (live
@@ -266,255 +239,63 @@ def recover_replace(table_path: str) -> None:
         os.rename(old, table_path)
 
 
-class ParquetStateBackend:
-    """Default backend: plain-parquet directories with `_SUCCESS`
-    visibility markers — the local stand-in for a transactional table.
-    See the module docstring for the contract a MERGE-capable
-    replacement must honor. Atomicity is per-partition (a crash
-    mid-fold can expose a prefix of the touched partitions — callers
-    carry set-union folds / WALs to converge on replay); ``replace``
-    is whole-table atomic via the two-rename swap + healing."""
-
-    def fold(
-        self, out: DataFrame, table_path: str, part_col: str, touched: list[int]
-    ) -> None:
-        swap_partitions(out, table_path, part_col, touched)
-
-    def append(self, out: DataFrame, table_path: str, part_col: str | None) -> None:
-        append_rows(out, table_path, part_col)
-
-    def read(
-        self, spark: SparkSession, table_path: str, part_col: str | None = None
-    ) -> DataFrame | None:
-        recover_replace(table_path)
-        if not os.path.exists(os.path.join(table_path, "_SUCCESS")):
-            return None
-        reader = spark.read
-        if part_col is not None:
-            reader = reader.option("basePath", table_path)
-        return reader.parquet(table_path)
-
-    def replace(
-        self, out: DataFrame, table_path: str, meta: dict | None = None
-    ) -> None:
-        """Whole-table replace; ``meta`` commits atomically with the
-        data (it travels INSIDE the staging directory, so the pair
-        becomes visible in the same rename). ``meta=None`` CARRIES the
-        existing meta forward (same semantic as
-        :meth:`ManifestStateBackend.replace` — a replace that doesn't
-        mention meta must not reset replay protection). The staging
-        write materializes ``out`` — which may still read the table's
-        current directory — BEFORE anything is moved."""
-        recover_replace(table_path)
-        if meta is None:
-            meta = self.read_meta(table_path)
-        staging = table_path + ".staging"
-        if os.path.exists(staging):
-            shutil.rmtree(staging)
-        out.write.parquet(staging)
-        if meta is not None:
-            with open(os.path.join(staging, "_meta.json"), "w") as f:
-                json.dump(meta, f)
-        old = table_path + ".old"
-        if os.path.exists(old):
-            shutil.rmtree(old)
-        if os.path.exists(table_path):
-            os.rename(table_path, old)
-        os.rename(staging, table_path)
-        if os.path.exists(old):
-            shutil.rmtree(old)
-
-    def read_meta(self, table_path: str) -> dict | None:
-        recover_replace(table_path)
-        path = os.path.join(table_path, "_meta.json")
-        if not os.path.exists(path):
-            return None
-        with open(path) as f:
-            return json.load(f)
+def fold(out: DataFrame, table_path: str, part_col: str, touched: list[int]) -> None:
+    """Replace the ``touched`` partitions with ``out``'s rows (see the
+    module docstring); drops the table when no partition is left."""
+    swap_partitions(out, table_path, part_col, touched)
 
 
-class ManifestStateBackend:
-    """Snapshot-isolated backend on plain parquet — the in-repo proof
-    that the seam's MERGE contract is implementable without a
-    dependency, and the shape a Delta/Iceberg binding would take.
+def append(out: DataFrame, table_path: str, part_col: str | None = None) -> None:
+    """Insert ``out``'s rows (see :func:`append_rows`)."""
+    append_rows(out, table_path, part_col)
 
-    Layout: ``<table>/data/[pt=X/]<uuid>.parquet`` immutable data
-    files plus ``<table>/_manifest.json`` mapping each partition value
-    (or ``"_all"`` for unpartitioned tables) to its live file list.
-    Every fold/append stages new files into ``data/`` (unreferenced =
-    invisible) and commits by atomically replacing the manifest
-    (tmp + ``os.replace``) — so a fold is visible either in full or
-    not at all, across ALL partitions at once: the per-partition
-    crash windows the default backend's callers must tolerate
-    (components' merge-intent WAL, the detector's ``_appended``
-    marker) cannot occur here by construction. Readers resolve the
-    manifest to an explicit file list, seeing exactly one snapshot.
-    Superseded files are garbage until :meth:`vacuum`."""
 
-    def _manifest_path(self, table_path: str) -> str:
-        return os.path.join(table_path, "_manifest.json")
+def read(
+    spark: SparkSession, table_path: str, part_col: str | None = None
+) -> DataFrame | None:
+    """The committed table, or ``None`` if never committed or drained."""
+    recover_replace(table_path)
+    if not os.path.exists(os.path.join(table_path, "_SUCCESS")):
+        return None
+    reader = spark.read
+    if part_col is not None:
+        reader = reader.option("basePath", table_path)
+    return reader.parquet(table_path)
 
-    def _load(self, table_path: str) -> dict | None:
-        path = self._manifest_path(table_path)
-        if not os.path.exists(path):
-            return None
-        with open(path) as f:
-            return json.load(f)
 
-    def _commit(self, table_path: str, manifest: dict) -> None:
-        tmp = self._manifest_path(table_path) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._manifest_path(table_path))
-
-    def _stage_files(
-        self, out: DataFrame, table_path: str, part_col: str | None
-    ) -> dict[str, list[str]]:
-        """Write ``out`` into data/ as immutable uniquely-named files;
-        returns {part_value: [relative paths]} of the NEW files (not
-        yet referenced by any manifest)."""
-        data = os.path.join(table_path, "data")
-        staging = os.path.join(table_path, f"_staging-{uuid.uuid4().hex}")
-        w = out.write
-        if part_col is not None:
-            w = w.partitionBy(part_col)
-        w.parquet(staging)
-        added: dict[str, list[str]] = {}
-        src_dirs = (
-            [
-                (d.split("=", 1)[1], os.path.join(staging, d))
-                for d in os.listdir(staging)
-                if d.startswith(f"{part_col}=")
-            ]
-            if part_col is not None
-            else [("_all", staging)]
-        )
-        for part_value, src in src_dirs:
-            rel_dir = f"{part_col}={part_value}" if part_col is not None else ""
-            os.makedirs(os.path.join(data, rel_dir), exist_ok=True)
-            for fn in os.listdir(src):
-                if not fn.endswith(".parquet"):
-                    continue
-                rel = os.path.join(rel_dir, f"{uuid.uuid4().hex}.parquet")
-                os.rename(os.path.join(src, fn), os.path.join(data, rel))
-                added.setdefault(part_value, []).append(rel)
+def replace(out: DataFrame, table_path: str, meta: dict | None = None) -> None:
+    """Whole-table replace; ``meta`` commits atomically with the data
+    (it travels INSIDE the staging directory, so the pair becomes
+    visible in the same rename). ``meta=None`` CARRIES the existing
+    meta forward — a replace that doesn't mention meta must not reset
+    replay protection. The staging write materializes ``out`` — which
+    may still read the table's current directory — BEFORE anything is
+    moved."""
+    recover_replace(table_path)
+    if meta is None:
+        meta = read_meta(table_path)
+    staging = table_path + ".staging"
+    if os.path.exists(staging):
         shutil.rmtree(staging)
-        return added
-
-    def fold(
-        self, out: DataFrame, table_path: str, part_col: str, touched: list[int]
-    ) -> None:
-        _check_int_parts(touched)
-        added = self._stage_files(out, table_path, part_col)
-        extra = set(added) - {str(p) for p in touched}
-        if extra:
-            # staged files are unreferenced (invisible); vacuum reclaims
-            raise ValueError(
-                f"fold contract violation: out contains partitions not in "
-                f"touched: {sorted(extra)} (touched={sorted(map(str, touched))})"
-            )
-        manifest = self._load(table_path) or {"version": 0, "parts": {}}
-        parts = dict(manifest["parts"])
-        for p in touched:  # replace semantics: empty output clears the part
-            parts.pop(str(p), None)
-        for part_value, files in added.items():
-            parts[str(part_value)] = files
-        self._commit(table_path, {"version": manifest["version"] + 1, "parts": parts})
-
-    def append(self, out: DataFrame, table_path: str, part_col: str | None) -> None:
-        added = self._stage_files(out, table_path, part_col)
-        manifest = self._load(table_path) or {"version": 0, "parts": {}}
-        parts = {k: list(v) for k, v in manifest["parts"].items()}
-        for part_value, files in added.items():
-            parts.setdefault(str(part_value), []).extend(files)
-        self._commit(table_path, {"version": manifest["version"] + 1, "parts": parts})
-
-    def read(
-        self, spark: SparkSession, table_path: str, part_col: str | None = None
-    ) -> DataFrame | None:
-        manifest = self._load(table_path)
-        if manifest is None or not manifest["parts"]:
-            return None
-        data = os.path.join(table_path, "data")
-        files = [
-            os.path.join(data, rel)
-            for file_list in manifest["parts"].values()
-            for rel in file_list
-        ]
-        if not files:
-            return None
-        reader = spark.read
-        if part_col is not None:
-            reader = reader.option("basePath", data)
-        return reader.parquet(*files)
-
-    def replace(
-        self, out: DataFrame, table_path: str, meta: dict | None = None
-    ) -> None:
-        """Whole-table replace in ONE manifest commit; ``meta`` lives
-        inside the manifest JSON itself, so data and marker are
-        atomic by construction — a crashed replace leaves the previous
-        (data, meta) snapshot fully intact."""
-        added = self._stage_files(out, table_path, None)
-        manifest = self._load(table_path) or {"version": 0, "parts": {}}
-        commit = {
-            "version": manifest["version"] + 1,
-            "parts": {"_all": added.get("_all", [])},
-        }
-        if meta is not None:
-            commit["meta"] = meta
-        elif "meta" in manifest:
-            commit["meta"] = manifest["meta"]
-        self._commit(table_path, commit)
-
-    def read_meta(self, table_path: str) -> dict | None:
-        manifest = self._load(table_path)
-        return None if manifest is None else manifest.get("meta")
-
-    def vacuum(self, table_path: str) -> int:
-        """Delete data files no manifest snapshot references (plus any
-        staging directory a crashed writer left behind); returns the
-        number of data files removed. Run out-of-band (single writer
-        owns the table, so 'current manifest' is the only live
-        snapshot)."""
-        if os.path.isdir(table_path):
-            for entry in os.listdir(table_path):
-                if entry.startswith("_staging-"):
-                    shutil.rmtree(os.path.join(table_path, entry))
-        manifest = self._load(table_path) or {"parts": {}}
-        live = {
-            rel for file_list in manifest["parts"].values() for rel in file_list
-        }
-        data = os.path.join(table_path, "data")
-        removed = 0
-        for root, _dirs, files in os.walk(data):
-            for fn in files:
-                rel = os.path.relpath(os.path.join(root, fn), data)
-                if rel not in live and fn.endswith(".parquet"):
-                    os.remove(os.path.join(root, fn))
-                    removed += 1
-        return removed
+    out.write.parquet(staging)
+    if meta is not None:
+        with open(os.path.join(staging, "_meta.json"), "w") as f:
+            json.dump(meta, f)
+    old = table_path + ".old"
+    if os.path.exists(old):
+        shutil.rmtree(old)
+    if os.path.exists(table_path):
+        os.rename(table_path, old)
+    os.rename(staging, table_path)
+    if os.path.exists(old):
+        shutil.rmtree(old)
 
 
-DEFAULT_BACKEND = ParquetStateBackend()
-
-
-def fold_state(
-    out: DataFrame,
-    table_path: str,
-    part_col: str,
-    touched: list[int],
-    backend: ParquetStateBackend | None = None,
-) -> None:
-    """Fold through the backend seam (partition replace semantics)."""
-    (backend or DEFAULT_BACKEND).fold(out, table_path, part_col, touched)
-
-
-def append_state(
-    out: DataFrame,
-    table_path: str,
-    part_col: str | None = None,
-    backend: ParquetStateBackend | None = None,
-) -> None:
-    """Append through the backend seam (insert semantics)."""
-    (backend or DEFAULT_BACKEND).append(out, table_path, part_col)
+def read_meta(table_path: str) -> dict | None:
+    """The ``meta`` dict committed by the last :func:`replace`, or ``None``."""
+    recover_replace(table_path)
+    path = os.path.join(table_path, "_meta.json")
+    if not os.path.exists(path):
+        return None
+    with open(path) as f:
+        return json.load(f)

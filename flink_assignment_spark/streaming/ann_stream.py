@@ -41,8 +41,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.similarity import ivf_probe
+from . import _state
 from ._state import (
-    DEFAULT_BACKEND,
     applied_batch,
     commit_marker,
     next_run_seq,
@@ -64,7 +64,6 @@ def probe_ann_batch(
     n_probe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    backend=None,
     marker: str = "_applied_batch",
     run_seq: int = 0,
 ) -> None:
@@ -74,13 +73,12 @@ def probe_ann_batch(
     latest-wins at read)."""
     if batch_id <= applied_batch(state_dir, marker):
         return
-    backend = backend or DEFAULT_BACKEND
     out = (
         ivf_probe(batch_df, centroids, index, k, n_probe, id_col, vec_col)
         .withColumn("batch_id", F.lit(int(batch_id)).cast("bigint"))
         .withColumn("run_seq", F.lit(int(run_seq)).cast("bigint"))
     )
-    backend.append(out.coalesce(8), _results_path(state_dir), None)
+    _state.append(out.coalesce(8), _results_path(state_dir), None)
     commit_marker(state_dir, batch_id, marker)
 
 
@@ -93,7 +91,6 @@ def ann_probe_stream(
     n_probe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    backend=None,
     checkpoint: str | None = None,
 ):
     """Start the streaming ANN probe; returns the StreamingQuery.
@@ -123,7 +120,6 @@ def ann_probe_stream(
             n_probe,
             id_col,
             vec_col,
-            backend,
             marker,
             run_seq,
         )
@@ -145,7 +141,6 @@ def probe_lsh_batch(
     n_tables: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    backend=None,
     marker: str = "_applied_batch",
     run_seq: int = 0,
 ) -> None:
@@ -158,7 +153,6 @@ def probe_lsh_batch(
 
     if batch_id <= applied_batch(state_dir, marker):
         return
-    backend = backend or DEFAULT_BACKEND
     out = lsh_topk(
         batch_df,
         None,
@@ -172,7 +166,7 @@ def probe_lsh_batch(
     ).withColumn("batch_id", F.lit(int(batch_id)).cast("bigint")).withColumn(
         "run_seq", F.lit(int(run_seq)).cast("bigint")
     )
-    backend.append(out.coalesce(8), _results_path(state_dir), None)
+    _state.append(out.coalesce(8), _results_path(state_dir), None)
     commit_marker(state_dir, batch_id, marker)
 
 
@@ -186,7 +180,6 @@ def lsh_probe_stream(
     n_tables: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    backend=None,
     checkpoint: str | None = None,
 ):
     """Start the streaming LSH ANN probe against a frozen bucketized
@@ -213,7 +206,6 @@ def lsh_probe_stream(
             n_tables,
             id_col,
             vec_col,
-            backend,
             marker,
             run_seq,
         )
@@ -224,7 +216,7 @@ def lsh_probe_stream(
     return w.start()
 
 
-def read_ann_results(spark: SparkSession, state_dir: str, backend=None) -> DataFrame:
+def read_ann_results(spark: SparkSession, state_dir: str) -> DataFrame:
     """Each query's CURRENT ranked neighbors. Within one run a query
     is scored in its arrival batch, so (query_id, rank) is unique;
     in-run replays of a batch append identical rows (deterministic
@@ -238,7 +230,7 @@ def read_ann_results(spark: SparkSession, state_dir: str, backend=None) -> DataF
     batch_id/run_seq remain as provenance columns."""
     from pyspark.sql import Window
 
-    raw = (backend or DEFAULT_BACKEND).read(spark, _results_path(state_dir))
+    raw = _state.read(spark, _results_path(state_dir))
     dd = raw.dropDuplicates(["run_seq", "batch_id", "query_id", "rank"])
     w = Window.partitionBy("query_id", "rank").orderBy(
         F.desc("run_seq"), F.desc("batch_id")
@@ -261,7 +253,6 @@ def probe_pq_batch(
     shortlist_k: int = 50,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    backend=None,
     marker: str = "_applied_batch",
     run_seq: int = 0,
 ) -> None:
@@ -274,7 +265,6 @@ def probe_pq_batch(
 
     if batch_id <= applied_batch(state_dir, marker):
         return
-    backend = backend or DEFAULT_BACKEND
     out = pq_topk(
         batch_df,
         corpus,
@@ -287,7 +277,7 @@ def probe_pq_batch(
     ).withColumn("batch_id", F.lit(int(batch_id)).cast("bigint")).withColumn(
         "run_seq", F.lit(int(run_seq)).cast("bigint")
     )
-    backend.append(out.coalesce(8), _results_path(state_dir), None)
+    _state.append(out.coalesce(8), _results_path(state_dir), None)
     commit_marker(state_dir, batch_id, marker)
 
 
@@ -301,7 +291,6 @@ def pq_probe_stream(
     shortlist_k: int = 50,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    backend=None,
     checkpoint: str | None = None,
 ):
     """Start the streaming PQ ANN probe against frozen (codebooks,
@@ -326,7 +315,6 @@ def pq_probe_stream(
             shortlist_k,
             id_col,
             vec_col,
-            backend,
             marker,
             run_seq,
         )

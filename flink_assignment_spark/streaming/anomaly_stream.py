@@ -36,8 +36,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from . import _state
 from ._state import (
-    DEFAULT_BACKEND,
     applied_batch,
     commit_marker,
     require_restart_checkpoint,
@@ -93,13 +93,11 @@ def merge_anomaly_batch(
     state_dir: str,
     ts_col: str = "ts",
     user_col: str = "user_id",
-    backend=None,
 ) -> None:
     """Fold one micro-batch of raw events and re-emit the touched
     users' verdicts."""
     if batch_id <= applied_batch(state_dir):
         return
-    backend = backend or DEFAULT_BACKEND
     spark = batch_df.sparkSession
 
     delta = (
@@ -115,7 +113,7 @@ def merge_anomaly_batch(
         delta.unpersist()
         commit_marker(state_dir, batch_id)
         return
-    backend.append(delta.repartition("bucket"), _daily_path(state_dir), "bucket")
+    _state.append(delta.repartition("bucket"), _daily_path(state_dir), "bucket")
 
     # recompute the touched users' full verdict set from state (the
     # trailing window of up to 7 later days shifts with every late
@@ -124,7 +122,7 @@ def merge_anomaly_batch(
     touched_buckets = [
         int(r.bucket) for r in delta.select("bucket").distinct().collect()
     ]
-    state = backend.read(spark, _daily_path(state_dir), "bucket")
+    state = _state.read(spark, _daily_path(state_dir), "bucket")
     daily = (
         state.filter(F.col("bucket").isin(touched_buckets))
         .dropDuplicates(["user_id", "day", "batch_id"])
@@ -136,17 +134,16 @@ def merge_anomaly_batch(
         "batch_id", F.lit(int(batch_id)).cast("bigint")
     )
     if report.limit(1).count():
-        backend.append(report.coalesce(8), _reports_path(state_dir), None)
+        _state.append(report.coalesce(8), _reports_path(state_dir), None)
     delta.unpersist()
     commit_marker(state_dir, batch_id)
 
 
-def read_anomalies(spark: SparkSession, state_dir: str, backend=None) -> DataFrame:
+def read_anomalies(spark: SparkSession, state_dir: str) -> DataFrame:
     """Latest verdict per (user, day), anomalies only — revisions from
     late data resolve LATEST-WINS on batch_id (exact replay
     duplicates collapse to one row)."""
-    backend = backend or DEFAULT_BACKEND
-    rep = backend.read(spark, _reports_path(state_dir))
+    rep = _state.read(spark, _reports_path(state_dir))
     if rep is None:
         raise ValueError(f"no anomaly reports at {state_dir}")
     w = Window.partitionBy("user_id", "day").orderBy(F.desc("batch_id"))
@@ -159,7 +156,7 @@ def read_anomalies(spark: SparkSession, state_dir: str, backend=None) -> DataFra
     return latest.filter(F.col("anomaly") == 1)
 
 
-def compact_daily(spark: SparkSession, state_dir: str, backend=None) -> None:
+def compact_daily(spark: SparkSession, state_dir: str) -> None:
     """Out-of-band OPTIMIZE: merge per-batch count deltas into one row
     per (user, day), marked batch_id = -1.
 
@@ -170,9 +167,8 @@ def compact_daily(spark: SparkSession, state_dir: str, backend=None) -> None:
     against the surviving original in the (user, day, batch_id) dedup;
     merging it into a -1 row would break that key and double-count.
     Such deltas stay verbatim until their batch commits."""
-    backend = backend or DEFAULT_BACKEND
     path = _daily_path(state_dir)
-    cur = backend.read(spark, path, "bucket")
+    cur = _state.read(spark, path, "bucket")
     if cur is None:
         return
     covered = int(applied_batch(state_dir))
@@ -189,7 +185,7 @@ def compact_daily(spark: SparkSession, state_dir: str, backend=None) -> None:
     )
     out = merged.unionByName(pending.select("bucket", "user_id", "day", "c", "batch_id"))
     all_buckets = [int(r.bucket) for r in cur.select("bucket").distinct().collect()]
-    backend.fold(out, path, "bucket", all_buckets)
+    _state.fold(out, path, "bucket", all_buckets)
 
 
 def incremental_anomaly(
@@ -197,7 +193,6 @@ def incremental_anomaly(
     state_dir: str,
     ts_col: str = "ts",
     user_col: str = "user_id",
-    backend=None,
     checkpoint: str | None = None,
 ):
     """Start the monitor; returns the StreamingQuery. Restart over
@@ -206,7 +201,7 @@ def incremental_anomaly(
     require_restart_checkpoint(state_dir, checkpoint)
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_anomaly_batch(batch_df, batch_id, state_dir, ts_col, user_col, backend)
+        merge_anomaly_batch(batch_df, batch_id, state_dir, ts_col, user_col)
 
     w = events.writeStream.outputMode("append").foreachBatch(_sink)
     if checkpoint is not None:

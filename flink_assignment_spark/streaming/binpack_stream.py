@@ -39,8 +39,8 @@ from pyspark.sql import functions as F
 
 from ..functions.text import tokens
 from ..operators.packing import SHARD_SHIFT, FirstFitTree
+from . import _state
 from ._state import (
-    DEFAULT_BACKEND,
     applied_batch,
     commit_marker,
     require_restart_checkpoint,
@@ -71,12 +71,10 @@ def merge_binpack_batch(
     id_col: str = "doc_id",
     text_col: str = "text",
     n_tokens_col: str | None = None,
-    backend=None,
 ) -> None:
     """Online-first-fit one micro-batch into the shard bins."""
     if batch_id <= applied_batch(state_dir):
         return
-    backend = backend or DEFAULT_BACKEND
     spark = batch_df.sparkSession
 
     if n_tokens_col is None:
@@ -100,7 +98,7 @@ def merge_binpack_batch(
         return
 
     path = _path(state_dir)
-    state = backend.read(spark, path, "shard")
+    state = _state.read(spark, path, "shard")
     doc_rows = docs.select(
         "shard",
         F.lit("doc").alias("kind"),
@@ -219,15 +217,14 @@ def merge_binpack_batch(
             "bin_id long, cap_left long, overflow boolean, batch_id bigint"
         ),
     )
-    backend.fold(out, path, "shard", touched)
+    _state.fold(out, path, "shard", touched)
     docs.unpersist()
     commit_marker(state_dir, batch_id)
 
 
-def read_assignments(spark: SparkSession, state_dir: str, backend=None) -> DataFrame:
+def read_assignments(spark: SparkSession, state_dir: str) -> DataFrame:
     """All (doc_id, n_tokens, bin_id, overflow) assignments so far."""
-    backend = backend or DEFAULT_BACKEND
-    st = backend.read(spark, _path(state_dir), "shard")
+    st = _state.read(spark, _path(state_dir), "shard")
     if st is None:
         raise ValueError(f"no binpack state at {state_dir}")
     return st.filter(F.col("kind") == "assign").select(
@@ -242,7 +239,6 @@ def incremental_binpack(
     id_col: str = "doc_id",
     text_col: str = "text",
     n_tokens_col: str | None = None,
-    backend=None,
     checkpoint: str | None = None,
 ):
     """Start the online packer; returns the StreamingQuery. Restart
@@ -253,7 +249,7 @@ def incremental_binpack(
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         merge_binpack_batch(
             batch_df, batch_id, state_dir, budget, id_col, text_col,
-            n_tokens_col, backend,
+            n_tokens_col,
         )
 
     w = docs.writeStream.outputMode("append").foreachBatch(_sink)

@@ -59,7 +59,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.components import connected_components
-from ._state import DEFAULT_BACKEND, applied_batch, commit_marker
+from . import _state
+from ._state import applied_batch, commit_marker
 
 PT_RANGE = 1 << 20  # node ids per mapping partition
 
@@ -108,12 +109,10 @@ def merge_components_batch(
     state_dir: str,
     src_col: str = "doc_a",
     dst_col: str = "doc_b",
-    backend=None,
 ) -> None:
     """Fold one micro-batch of near-dup pairs into the cluster state."""
     if batch_id <= applied_batch(state_dir):
         return
-    backend = backend or DEFAULT_BACKEND
     spark = pairs_df.sparkSession
     os.makedirs(state_dir, exist_ok=True)
     mpath = _mapping_path(state_dir)
@@ -130,7 +129,7 @@ def merge_components_batch(
         .distinct()
     )
 
-    m = backend.read(spark, mpath, "pt")
+    m = _state.read(spark, mpath, "pt")
     if m is not None:
         # the batch's nodes can only live in their own id-range
         # partitions — prune the first lookup pass to those (the
@@ -200,7 +199,7 @@ def merge_components_batch(
         with open(tmp, "w") as f:
             json.dump({"batch_id": int(batch_id), "merges": merges}, f)
         os.replace(tmp, _intent_path(state_dir))
-    backend.fold(
+    _state.fold(
         out.select("node", "component", _pt(F.col("node")).alias("pt")),
         mpath,
         "pt",
@@ -219,24 +218,19 @@ def incremental_components(
     state_dir: str,
     src_col: str = "doc_a",
     dst_col: str = "doc_b",
-    backend=None,
 ):
     """Start the cluster-maintenance query; returns the StreamingQuery."""
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_components_batch(
-            batch_df, batch_id, state_dir, src_col, dst_col, backend
-        )
+        merge_components_batch(batch_df, batch_id, state_dir, src_col, dst_col)
 
     return pairs.writeStream.outputMode("append").foreachBatch(_sink).start()
 
 
-def read_components(
-    spark: SparkSession, state_dir: str, backend=None
-) -> DataFrame:
+def read_components(spark: SparkSession, state_dir: str) -> DataFrame:
     """The maintained (node, component) mapping; empty typed frame
     before any pair has arrived."""
-    m = (backend or DEFAULT_BACKEND).read(spark, _mapping_path(state_dir), "pt")
+    m = _state.read(spark, _mapping_path(state_dir), "pt")
     if m is None:
         return spark.createDataFrame([], "node long, component long")
     return m.select("node", "component")

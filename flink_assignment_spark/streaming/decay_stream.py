@@ -13,7 +13,7 @@ State under ``foreachBatch``:
 
 - ``counts/`` — ``(bucket, user_id, day, c, as_of_batch)``,
   hash-bucket-partitioned on the user. Folded by bounded rewrite of
-  the TOUCHED buckets only (``backend.fold``); ``as_of_batch`` on the
+  the TOUCHED buckets only (``_state.fold``); ``as_of_batch`` on the
   folded rows closes the post-swap-pre-marker crash window exactly the
   way the gapfill frontier does: a replay drops the batch's
   contribution for users whose state already records this batch id,
@@ -37,8 +37,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.decay_score import DECAY_KCAP, decay_age
+from . import _state
 from ._state import (
-    DEFAULT_BACKEND,
     applied_batch,
     commit_marker,
     require_restart_checkpoint,
@@ -61,13 +61,11 @@ def merge_decay_batch(
     state_dir: str,
     user_col: str = "user_id",
     ts_col: str = "ts",
-    backend=None,
 ) -> None:
     """Fold one micro-batch of events into the per-(user, day) count
     state — see the module docstring for the crash/replay contract."""
     if batch_id <= applied_batch(state_dir):
         return
-    backend = backend or DEFAULT_BACKEND
     spark = batch_df.sparkSession
     path = _counts_path(state_dir)
 
@@ -85,7 +83,7 @@ def merge_decay_batch(
         return
 
     touched = [int(r.bucket) for r in b.select("bucket").distinct().collect()]
-    state = backend.read(spark, path, "bucket")
+    state = _state.read(spark, path, "bucket")
     if state is not None:
         state = state.filter(F.col("bucket").isin(touched)).cache()
         state.count()
@@ -120,7 +118,7 @@ def merge_decay_batch(
             "c",
             F.lit(int(batch_id)).cast("bigint").alias("as_of_batch"),
         )
-    backend.fold(merged.repartition("bucket"), path, "bucket", touched)
+    _state.fold(merged.repartition("bucket"), path, "bucket", touched)
     b.unpersist()
     if state is not None:
         state.unpersist()
@@ -131,14 +129,12 @@ def read_decay(
     spark: SparkSession,
     state_dir: str,
     asof: str,
-    backend=None,
 ) -> DataFrame:
     """(user_id, decay_score, n_events) as of ``asof`` — the q139 row
     shape, scored from the folded counts with the identical dyadic
     kernel (exact, fold-order-free). ``asof`` must be at or after any
     compaction horizon used (a NULL day row is always-capped)."""
-    backend = backend or DEFAULT_BACKEND
-    counts = backend.read(spark, _counts_path(state_dir), "bucket")
+    counts = _state.read(spark, _counts_path(state_dir), "bucket")
     if counts is None:
         raise ValueError(f"no decay state at {state_dir}")
     k = decay_age(F.col("day"), asof)
@@ -155,17 +151,14 @@ def read_decay(
     )
 
 
-def compact_decay(
-    spark: SparkSession, state_dir: str, horizon: str, backend=None
-) -> None:
+def compact_decay(spark: SparkSession, state_dir: str, horizon: str) -> None:
     """Out-of-band OPTIMIZE: fold every day at or older than
     ``horizon − DECAY_KCAP`` into ONE always-capped sentinel row per
     user (day = NULL) — for any read ``asof ≥ horizon`` those days all
     score at 2^-KCAP anyway, so the answer is pinned unchanged while
     state drops to ≤ (KCAP + 1) + 1 rows per user."""
-    backend = backend or DEFAULT_BACKEND
     path = _counts_path(state_dir)
-    cur = backend.read(spark, path, "bucket")
+    cur = _state.read(spark, path, "bucket")
     if cur is None:
         return
     cutoff = F.lit(horizon).cast("date") - F.lit(DECAY_KCAP)
@@ -176,7 +169,7 @@ def compact_decay(
         .agg(F.sum("c").alias("c"), F.max("as_of_batch").alias("as_of_batch"))
     )
     all_buckets = [int(r.bucket) for r in cur.select("bucket").distinct().collect()]
-    backend.fold(folded, path, "bucket", all_buckets)
+    _state.fold(folded, path, "bucket", all_buckets)
 
 
 def incremental_decay(
@@ -184,7 +177,6 @@ def incremental_decay(
     state_dir: str,
     user_col: str = "user_id",
     ts_col: str = "ts",
-    backend=None,
     checkpoint: str | None = None,
 ):
     """Start the decayed-activity maintenance query; returns the
@@ -194,7 +186,7 @@ def incremental_decay(
     require_restart_checkpoint(state_dir, checkpoint)
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_decay_batch(batch_df, batch_id, state_dir, user_col, ts_col, backend)
+        merge_decay_batch(batch_df, batch_id, state_dir, user_col, ts_col)
 
     w = events.writeStream.outputMode("append").foreachBatch(_sink)
     if checkpoint is not None:

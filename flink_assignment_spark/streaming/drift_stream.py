@@ -11,7 +11,7 @@ the same exact integer space as batch q134. State under
 - ``counts/`` — cumulative per-category (n_first, n_second) counts
   (category-cardinality: a handful of rows, replaced wholesale per
   batch; the applied-batch marker commits atomically WITH the fold
-  via the backend's meta, the mixture-stream contract, so a replayed
+  via the counts table's meta, the mixture-stream contract, so a replayed
   batch can never double-count).
 - ``report/`` — one appended drift report per batch:
   ``(batch_id, event_type, n_first, n_second, delta_ppm, tv_ppm)``
@@ -31,7 +31,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ._state import DEFAULT_BACKEND, ParquetStateBackend
+from . import _state
 
 
 def _counts_path(state_dir: str) -> str:
@@ -42,8 +42,8 @@ def _report_path(state_dir: str) -> str:
     return os.path.join(state_dir, "report")
 
 
-def _applied_batch(counts_path: str, backend: ParquetStateBackend) -> int:
-    meta = backend.read_meta(counts_path)
+def _applied_batch(counts_path: str) -> int:
+    meta = _state.read_meta(counts_path)
     return -1 if meta is None else int(meta.get("applied_batch", -1))
 
 
@@ -54,7 +54,6 @@ def merge_drift_batch(
     cutoff: str,
     type_col: str = "event_type",
     ts_col: str = "ts",
-    backend: ParquetStateBackend | None = None,
 ) -> None:
     """Fold one micro-batch's per-category window counts into state
     and append the post-fold drift report. Replace-fold + meta-marker
@@ -63,15 +62,14 @@ def merge_drift_batch(
     append only costs that batch's REPORT row, which the next batch's
     cumulative report supersedes (reports are monotone snapshots, not
     deltas)."""
-    backend = backend or DEFAULT_BACKEND
     counts_path = _counts_path(state_dir)
-    if batch_id <= _applied_batch(counts_path, backend):
+    if batch_id <= _applied_batch(counts_path):
         return
     spark = batch_df.sparkSession
     from ..operators.drift import window_counts
 
     batch_counts = window_counts(batch_df, cutoff, type_col, ts_col)
-    prev = backend.read(spark, counts_path)
+    prev = _state.read(spark, counts_path)
     if prev is not None:
         merged = (
             prev.unionByName(batch_counts)
@@ -83,21 +81,20 @@ def merge_drift_batch(
         )
     else:
         merged = batch_counts
-    backend.replace(merged, counts_path, meta={"applied_batch": int(batch_id)})
-    folded = backend.read(spark, counts_path)
+    _state.replace(merged, counts_path, meta={"applied_batch": int(batch_id)})
+    folded = _state.read(spark, counts_path)
     from ..operators.drift import tv_report
 
     report = tv_report(folded).withColumn(
         "batch_id", F.lit(int(batch_id)).cast("bigint")
     )
-    backend.append(report.coalesce(1), _report_path(state_dir), None)
+    _state.append(report.coalesce(1), _report_path(state_dir), None)
 
 
-def read_drift(spark: SparkSession, state_dir: str, backend=None) -> DataFrame:
+def read_drift(spark: SparkSession, state_dir: str) -> DataFrame:
     """The LATEST cumulative drift report (max batch_id; duplicate
     appends from a replay are identical rows, dropped per category)."""
-    backend = backend or DEFAULT_BACKEND
-    rep = backend.read(spark, _report_path(state_dir))
+    rep = _state.read(spark, _report_path(state_dir))
     if rep is None:
         raise ValueError(f"no drift state at {state_dir}")
     last = rep.agg(F.max("batch_id")).collect()[0][0]
@@ -108,11 +105,10 @@ def read_drift(spark: SparkSession, state_dir: str, backend=None) -> DataFrame:
     )
 
 
-def drift_trajectory(spark: SparkSession, state_dir: str, backend=None) -> DataFrame:
+def drift_trajectory(spark: SparkSession, state_dir: str) -> DataFrame:
     """One (batch_id, tv_ppm) row per applied batch — the alarm
     trajectory a monitor plots/thresholds."""
-    backend = backend or DEFAULT_BACKEND
-    rep = backend.read(spark, _report_path(state_dir))
+    rep = _state.read(spark, _report_path(state_dir))
     if rep is None:
         raise ValueError(f"no drift state at {state_dir}")
     return rep.select("batch_id", "tv_ppm").dropDuplicates(["batch_id"])
@@ -124,7 +120,6 @@ def incremental_drift(
     cutoff: str,
     type_col: str = "event_type",
     ts_col: str = "ts",
-    backend=None,
     checkpoint: str | None = None,
 ):
     """Start the drift-monitoring query; returns the StreamingQuery.
@@ -137,9 +132,7 @@ def incremental_drift(
     with no error. Refuse it; a fresh state dir or a checkpoint is
     required.
     """
-    if checkpoint is None and _applied_batch(
-        _counts_path(state_dir), backend or DEFAULT_BACKEND
-    ) >= 0:
+    if checkpoint is None and _applied_batch(_counts_path(state_dir)) >= 0:
         raise ValueError(
             f"state dir {state_dir!r} holds a previous run's applied-batch "
             "marker (counts meta); restarting without a checkpoint would "
@@ -149,9 +142,7 @@ def incremental_drift(
         )
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_drift_batch(
-            batch_df, batch_id, state_dir, cutoff, type_col, ts_col, backend
-        )
+        merge_drift_batch(batch_df, batch_id, state_dir, cutoff, type_col, ts_col)
 
     w = events.writeStream.outputMode("append").foreachBatch(_sink)
     if checkpoint is not None:

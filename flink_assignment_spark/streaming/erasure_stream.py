@@ -35,8 +35,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import _state
 from ._state import (
-    DEFAULT_BACKEND,
     applied_batch,
     commit_marker,
     require_restart_checkpoint,
@@ -54,13 +54,11 @@ def merge_tombstone_batch(
     batch_id: int,
     state_dir: str,
     key_col: str = "user_id",
-    backend=None,
 ) -> None:
     """Fold one micro-batch of delete requests into the tombstone
     set."""
     if batch_id <= applied_batch(state_dir):
         return
-    backend = backend or DEFAULT_BACKEND
     t = (
         batch_df.select(F.col(key_col).alias("user_id"))
         .distinct()
@@ -71,14 +69,13 @@ def merge_tombstone_batch(
             ),
         )
     )
-    backend.append(t.repartition("bucket"), _tombs_path(state_dir), "bucket")
+    _state.append(t.repartition("bucket"), _tombs_path(state_dir), "bucket")
     commit_marker(state_dir, batch_id)
 
 
-def read_tombstones(spark: SparkSession, state_dir: str, backend=None) -> DataFrame:
+def read_tombstones(spark: SparkSession, state_dir: str) -> DataFrame:
     """The deduplicated tombstone set (user_id)."""
-    backend = backend or DEFAULT_BACKEND
-    t = backend.read(spark, _tombs_path(state_dir), "bucket")
+    t = _state.read(spark, _tombs_path(state_dir), "bucket")
     if t is None:
         raise ValueError(f"no erasure state at {state_dir}")
     return t.select("user_id").distinct()
@@ -88,7 +85,6 @@ def gate_batch(
     records: DataFrame,
     state_dir: str,
     key_col: str = "user_id",
-    backend=None,
 ) -> DataFrame:
     """Drop every record whose subject is tombstoned — one broadcast
     anti-join against the (tiny) tombstone set; run it inside any
@@ -96,8 +92,7 @@ def gate_batch(
     state yet (the gate wired before the first delete request lands)
     is a NORMAL state, not an error: the batch passes through
     unchanged rather than crashing the sink."""
-    backend = backend or DEFAULT_BACKEND
-    t = backend.read(records.sparkSession, _tombs_path(state_dir), "bucket")
+    t = _state.read(records.sparkSession, _tombs_path(state_dir), "bucket")
     if t is None:
         return records
     tomb = t.select("user_id").distinct()
@@ -115,16 +110,14 @@ def purge_bucketed_state(
     bucket_expr,
     state_dir: str,
     key_col: str = "user_id",
-    backend=None,
 ) -> None:
     """Retro-purge tombstoned subjects from a bucket-partitioned state
     table: rewrite ONLY the buckets a tombstone hashes into
     (``bucket_expr``: the TABLE's own user→bucket mapping, e.g.
     decay_stream's) — k tombstones cost ≤ k bucket rewrites, never a
     table scan-and-write."""
-    backend = backend or DEFAULT_BACKEND
-    tomb = read_tombstones(spark, state_dir, backend)
-    cur = backend.read(spark, table_path, part_col)
+    tomb = read_tombstones(spark, state_dir)
+    cur = _state.read(spark, table_path, part_col)
     if cur is None:
         return
     touched = [
@@ -139,14 +132,13 @@ def purge_bucketed_state(
         cur.filter(F.col(part_col).isin(touched))
         .join(F.broadcast(tomb.withColumnRenamed("user_id", key_col)), key_col, "left_anti")
     )
-    backend.fold(kept.repartition(part_col), table_path, part_col, touched)
+    _state.fold(kept.repartition(part_col), table_path, part_col, touched)
 
 
 def incremental_tombstones(
     requests: DataFrame,
     state_dir: str,
     key_col: str = "user_id",
-    backend=None,
     checkpoint: str | None = None,
 ):
     """Start the tombstone-fold query; returns the StreamingQuery. The
@@ -156,7 +148,7 @@ def incremental_tombstones(
     require_restart_checkpoint(state_dir, checkpoint)
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_tombstone_batch(batch_df, batch_id, state_dir, key_col, backend)
+        merge_tombstone_batch(batch_df, batch_id, state_dir, key_col)
 
     w = requests.writeStream.outputMode("append").foreachBatch(_sink)
     if checkpoint is not None:

@@ -44,8 +44,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import hash60
+from . import _state
 from ._state import (
-    DEFAULT_BACKEND,
     applied_batch,
     commit_marker,
     require_restart_checkpoint,
@@ -76,13 +76,11 @@ def merge_gapfill_batch(
     value_col: str = "value",
     tie_col: str = "event_id",
     bucket: str = "hour",
-    backend=None,
 ) -> None:
     """Emit one micro-batch's dense bucket rows and advance the
     per-key frontier — see the module docstring for the contract."""
     if batch_id <= applied_batch(state_dir):
         return
-    backend = backend or DEFAULT_BACKEND
     spark = batch_df.sparkSession
     last_path, filled_path = _last_path(state_dir), _filled_path(state_dir)
     iv = _IV[bucket]
@@ -113,7 +111,7 @@ def merge_gapfill_batch(
         return
 
     touched = [int(r.hb) for r in obs.select("hb").distinct().collect()]
-    state = backend.read(spark, last_path, "bucket")
+    state = _state.read(spark, last_path, "bucket")
     if state is not None:
         state = state.filter(F.col("bucket").isin(touched)).cache()
         state.count()
@@ -186,7 +184,7 @@ def merge_gapfill_batch(
     rows.count()
     obs.unpersist()
 
-    backend.append(
+    _state.append(
         rows.select(
             "key",
             "bucket_ts",
@@ -221,21 +219,20 @@ def merge_gapfill_batch(
         folded = carried.unionByName(new_frontier)
     else:
         folded = new_frontier
-    backend.fold(folded.repartition("bucket"), last_path, "bucket", touched)
+    _state.fold(folded.repartition("bucket"), last_path, "bucket", touched)
     rows.unpersist()
     if state is not None:
         state.unpersist()
     commit_marker(state_dir, batch_id)
 
 
-def read_filled(spark: SparkSession, state_dir: str, backend=None) -> DataFrame:
+def read_filled(spark: SparkSession, state_dir: str) -> DataFrame:
     """The dense series emitted so far. LATEST-BATCH-WINS per
     (key, bucket_ts): a time bucket spanning a batch boundary is
     re-emitted by the later batch with the overriding value, and
     replay duplicates (same batch id, identical rows) collapse the
     same way."""
-    backend = backend or DEFAULT_BACKEND
-    filled = backend.read(spark, _filled_path(state_dir))
+    filled = _state.read(spark, _filled_path(state_dir))
     if filled is None:
         raise ValueError(f"no gap-fill state at {state_dir}")
     w = Window.partitionBy("key", "bucket_ts").orderBy(F.desc("batch_id"))
@@ -254,7 +251,6 @@ def incremental_gapfill(
     value_col: str = "value",
     tie_col: str = "event_id",
     bucket: str = "hour",
-    backend=None,
     checkpoint: str | None = None,
 ):
     """Start the gap-fill query; returns the StreamingQuery. Refuses
@@ -265,7 +261,7 @@ def incremental_gapfill(
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         merge_gapfill_batch(
             batch_df, batch_id, state_dir, key_col, ts_col, value_col,
-            tie_col, bucket, backend,
+            tie_col, bucket,
         )
 
     w = events.writeStream.outputMode("append").foreachBatch(_sink)

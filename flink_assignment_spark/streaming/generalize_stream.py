@@ -53,11 +53,10 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from . import _state
 from ._state import (
-    DEFAULT_BACKEND,
     applied_batch,
     commit_marker,
-    drop_if_drained,
     require_restart_checkpoint,
 )
 
@@ -114,14 +113,12 @@ def merge_generalize_batch(
     levels: list[dict[str, Column]],
     k: int,
     id_col: str,
-    backend=None,
 ) -> None:
     """Fold one micro-batch through the generalize-then-release gate:
     the batch operator's level walk over (pending ∪ new arrivals),
     with open groups releasing immediately at their level."""
     if batch_id <= applied_batch(state_dir):
         return
-    backend = backend or DEFAULT_BACKEND
     spark = batch_df.sparkSession
     n_levels = len(levels)
     rows = _with_keys(batch_df, quasi_cols, levels).cache()
@@ -131,7 +128,7 @@ def merge_generalize_batch(
         return
 
     touched = [int(r.bucket) for r in rows.select("bucket").distinct().collect()]
-    pending = backend.read(spark, _pending_path(state_dir), "bucket")
+    pending = _state.read(spark, _pending_path(state_dir), "bucket")
     pend_touched = (
         pending.filter(F.col("bucket").isin(touched)).dropDuplicates([id_col]).cache()
         if pending is not None
@@ -145,7 +142,7 @@ def merge_generalize_batch(
         cand = pend_touched.unionByName(rows_new.select(*pend_touched.columns))
     else:
         cand = rows
-    open_df = backend.read(spark, _open_path(state_dir))
+    open_df = _state.read(spark, _open_path(state_dir))
 
     released_parts: list[DataFrame] = []
     opened_parts: list[DataFrame] = []
@@ -186,18 +183,17 @@ def merge_generalize_batch(
         "batch_id", F.lit(int(batch_id)).cast("bigint")
     )
     if released.limit(1).count():
-        backend.append(released.coalesce(8), _released_path(state_dir), None)
+        _state.append(released.coalesce(8), _released_path(state_dir), None)
     opened = opened_parts[0]
     for p in opened_parts[1:]:
         opened = opened.unionByName(p)
     if opened.limit(1).count():
-        backend.append(opened.coalesce(1), _open_path(state_dir), None)
+        _state.append(opened.coalesce(1), _open_path(state_dir), None)
     # pending rewrite over ALL arrival buckets (not just still-closed
     # ones): an already-open group's replayed backlog must purge
-    backend.fold(
+    _state.fold(
         cand.dropDuplicates([id_col]), _pending_path(state_dir), "bucket", touched
     )
-    drop_if_drained(_pending_path(state_dir))
     rows.unpersist()
     for df in cached:
         df.unpersist()
@@ -206,14 +202,11 @@ def merge_generalize_batch(
     commit_marker(state_dir, batch_id)
 
 
-def read_released(
-    spark: SparkSession, state_dir: str, id_col: str, backend=None
-) -> DataFrame:
+def read_released(spark: SparkSession, state_dir: str, id_col: str) -> DataFrame:
     """Released records with their generalization level — replay
     duplicates resolved deterministically per record id (finest level,
     then earliest batch, wins)."""
-    backend = backend or DEFAULT_BACKEND
-    df = backend.read(spark, _released_path(state_dir))
+    df = _state.read(spark, _released_path(state_dir))
     if df is None:
         raise ValueError(f"nothing released yet at {state_dir}")
     w = Window.partitionBy(id_col).orderBy("gen_level", "batch_id")
@@ -224,9 +217,9 @@ def read_released(
     )
 
 
-def read_pending(spark: SparkSession, state_dir: str, backend=None) -> DataFrame | None:
+def read_pending(spark: SparkSession, state_dir: str) -> DataFrame | None:
     """Unreleased records (None before any fold)."""
-    return (backend or DEFAULT_BACKEND).read(
+    return _state.read(
         spark, _pending_path(state_dir), "bucket"
     )
 
@@ -238,7 +231,6 @@ def incremental_generalize(
     levels: list[dict[str, Column]],
     k: int,
     id_col: str,
-    backend=None,
     checkpoint: str | None = None,
 ):
     """Start the generalize-then-release gate; returns the
@@ -248,7 +240,7 @@ def incremental_generalize(
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         merge_generalize_batch(
-            batch_df, batch_id, state_dir, quasi_cols, levels, k, id_col, backend
+            batch_df, batch_id, state_dir, quasi_cols, levels, k, id_col
         )
 
     w = records.writeStream.outputMode("append").foreachBatch(_sink)

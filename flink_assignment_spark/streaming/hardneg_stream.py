@@ -42,7 +42,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ._state import DEFAULT_BACKEND, applied_batch, commit_marker, run_marker
+from . import _state
+from ._state import applied_batch, commit_marker, run_marker
 
 
 def _topk_path(state_dir: str) -> str:
@@ -91,21 +92,19 @@ def mine_negatives_batch(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     label_col: str = "label",
-    backend=None,
     marker: str = "_applied_batch",
 ) -> None:
     """Fold one corpus micro-batch into the running top-k negatives
     table (see module docstring for the exactness/replay contract)."""
     if batch_id <= applied_batch(state_dir, marker):
         return
-    backend = backend or DEFAULT_BACKEND
     spark = batch_df.sparkSession
     cands = batch_df.select(
         F.col(id_col), F.col(vec_col), F.col(label_col)
     ).mapInPandas(
         kernel, schema="query_id bigint, neighbor_id bigint, cos_sim double"
     ).select("query_id", "neighbor_id", F.round("cos_sim", 6).alias("cos_sim"))
-    state = backend.read(spark, _topk_path(state_dir))
+    state = _state.read(spark, _topk_path(state_dir))
     if state is not None:
         cands = cands.unionByName(state.select("query_id", "neighbor_id", "cos_sim"))
     w = Window.partitionBy("query_id").orderBy(
@@ -119,7 +118,7 @@ def mine_negatives_batch(
     # O(|anchors| x k) rows: the whole-table replace is the bounded
     # fold here, not a scale concern (the staging write materializes
     # the union BEFORE the old table moves)
-    backend.replace(topk.coalesce(1), _topk_path(state_dir))
+    _state.replace(topk.coalesce(1), _topk_path(state_dir))
     commit_marker(state_dir, batch_id, marker)
 
 
@@ -131,7 +130,6 @@ def hard_negatives_stream(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     label_col: str = "label",
-    backend=None,
     checkpoint: str | None = None,
 ):
     """Start the miner; returns the StreamingQuery. ``kernel`` comes
@@ -153,7 +151,6 @@ def hard_negatives_stream(
             id_col,
             vec_col,
             label_col,
-            backend,
             marker,
         )
 
@@ -163,9 +160,7 @@ def hard_negatives_stream(
     return w.start()
 
 
-def read_hard_negatives(
-    spark: SparkSession, state_dir: str, backend=None
-) -> DataFrame:
+def read_hard_negatives(spark: SparkSession, state_dir: str) -> DataFrame:
     """The current top-k negatives per anchor — (query_id,
     neighbor_id, cos_sim, rank), already globally folded."""
-    return (backend or DEFAULT_BACKEND).read(spark, _topk_path(state_dir))
+    return _state.read(spark, _topk_path(state_dir))

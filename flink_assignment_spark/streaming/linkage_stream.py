@@ -42,8 +42,8 @@ from pyspark.sql import functions as F
 
 from ..functions.text import hash60
 from ..operators.linkage import deletion_neighborhood
+from . import _state
 from ._state import (
-    DEFAULT_BACKEND,
     applied_batch,
     commit_marker,
     require_restart_checkpoint,
@@ -111,7 +111,6 @@ def merge_linkage_batch(
     id_col: str = "rid",
     name_col: str = "name",
     max_dist: int = 1,
-    backend=None,
 ) -> None:
     """Match one micro-batch against itself and the seen-record index,
     then extend the index — see the module docstring for the
@@ -122,7 +121,6 @@ def merge_linkage_batch(
     if batch_id <= applied_batch(state_dir):
         return
     max_dist = _resolve_max_dist(state_dir, max_dist)
-    backend = backend or DEFAULT_BACKEND
     spark = batch_df.sparkSession
     var_path, pairs_path = _variants_path(state_dir), _pairs_path(state_dir)
 
@@ -144,7 +142,7 @@ def merge_linkage_batch(
         F.col("b.name").alias("name_b"),
     )
 
-    state = backend.read(spark, var_path, "bucket")
+    state = _state.read(spark, var_path, "bucket")
     if state is not None:
         touched_probe = [
             int(r.bucket) for r in v.select("bucket").distinct().collect()
@@ -179,10 +177,10 @@ def merge_linkage_batch(
             F.lit(int(batch_id)).cast("bigint").alias("batch_id"),
         )
     )
-    backend.append(pairs.coalesce(8), pairs_path, None)
+    _state.append(pairs.coalesce(8), pairs_path, None)
     # insert-only index ⇒ pure delta-append; repartition first so each
     # touched bucket gains ONE file per batch (split_stream's finding)
-    backend.append(
+    _state.append(
         v.select("var", "rid", "name", "bucket").repartition("bucket"),
         var_path,
         "bucket",
@@ -191,28 +189,26 @@ def merge_linkage_batch(
     commit_marker(state_dir, batch_id)
 
 
-def read_pairs(spark: SparkSession, state_dir: str, backend=None) -> DataFrame:
+def read_pairs(spark: SparkSession, state_dir: str) -> DataFrame:
     """All fuzzy pairs found so far — replay duplicates and
     cross-batch rediscoveries dropped by (id_a, id_b)."""
-    backend = backend or DEFAULT_BACKEND
-    pairs = backend.read(spark, _pairs_path(state_dir))
+    pairs = _state.read(spark, _pairs_path(state_dir))
     if pairs is None:
         raise ValueError(f"no linkage state at {state_dir}")
     return pairs.dropDuplicates(["id_a", "id_b"]).select("id_a", "id_b", "dist")
 
 
-def compact_variants(spark: SparkSession, state_dir: str, backend=None) -> None:
+def compact_variants(spark: SparkSession, state_dir: str) -> None:
     """Out-of-band OPTIMIZE: rewrite the delta-appended variant index
     as one deduplicated table (replayed appends leave exact row
     duplicates, which only fan the probe into pair rows the reader
     already drops)."""
-    backend = backend or DEFAULT_BACKEND
     path = _variants_path(state_dir)
-    cur = backend.read(spark, path, "bucket")
+    cur = _state.read(spark, path, "bucket")
     if cur is None:
         return
     all_buckets = [int(r.bucket) for r in cur.select("bucket").distinct().collect()]
-    backend.fold(
+    _state.fold(
         cur.dropDuplicates(["var", "rid"]).select("var", "rid", "name", "bucket"),
         path,
         "bucket",
@@ -226,7 +222,6 @@ def incremental_linkage(
     id_col: str = "rid",
     name_col: str = "name",
     max_dist: int = 1,
-    backend=None,
     checkpoint: str | None = None,
 ):
     """Start the linkage query; returns the StreamingQuery.
@@ -240,9 +235,7 @@ def incremental_linkage(
     require_restart_checkpoint(state_dir, checkpoint)
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_linkage_batch(
-            batch_df, batch_id, state_dir, id_col, name_col, max_dist, backend
-        )
+        merge_linkage_batch(batch_df, batch_id, state_dir, id_col, name_col, max_dist)
 
     w = records.writeStream.outputMode("append").foreachBatch(_sink)
     if checkpoint is not None:

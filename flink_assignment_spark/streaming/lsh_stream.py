@@ -69,7 +69,6 @@ def merge_lsh_batch(
     rows_per_band: int = 2,
     max_state_bucket: int | None = None,
     n_pt: int | None = None,
-    backend=None,
     compact_every: int | None = None,
 ) -> None:
     """Detect the batch's candidate near-dup pairs against state +
@@ -91,7 +90,6 @@ def merge_lsh_batch(
         score_keep=None,  # estimates: every colliding pair is a candidate
         max_state_bucket=max_state_bucket,
         n_pt=n_pt,
-        backend=backend,
         compact_every=compact_every,
     )
 
@@ -104,7 +102,6 @@ def incremental_lsh_neardup(
     rows_per_band: int = 2,
     max_state_bucket: int | None = None,
     n_pt: int | None = None,
-    backend=None,
     compact_every: int | None = None,
     checkpoint: str | None = None,
 ):
@@ -130,7 +127,6 @@ def incremental_lsh_neardup(
             rows_per_band,
             max_state_bucket,
             n_pt,
-            backend,
             compact_every,
         )
 
@@ -140,15 +136,11 @@ def incremental_lsh_neardup(
     return w.start()
 
 
-def read_candidate_pairs(
-    spark: SparkSession, state_dir: str, backend=None
-) -> DataFrame:
+def read_candidate_pairs(spark: SparkSession, state_dir: str) -> DataFrame:
     """Accumulated distinct candidate pairs with their signature-
     estimated Jaccard (replays may append duplicates — distinct'd at
     read; no pairs/ table is a legitimate empty result)."""
-    return read_pairs(
-        spark, state_dir, "doc_a long, doc_b long, est_jaccard double", backend
-    )
+    return read_pairs(spark, state_dir, "doc_a long, doc_b long, est_jaccard double")
 
 
 def verify_candidates(
@@ -185,11 +177,10 @@ def verify_candidates(
     return pairs.join(exact, ["doc_a", "doc_b"])
 
 
-def erase_lsh_docs(spark: SparkSession, state_dir: str, doc_ids, backend=None) -> None:
+def erase_lsh_docs(spark: SparkSession, state_dir: str, doc_ids) -> None:
     """Right-to-be-forgotten cascade for the LSH detector's state —
     band-bucket memberships, MinHash signatures, and candidate pairs
     (see ``_detector.erase_docs`` for the crash-safe ordering)."""
     from ._detector import erase_docs
 
-    erase_docs(spark, state_dir, doc_ids, key_cols=_KEYS, payload_col="sig",
-               backend=backend)
+    erase_docs(spark, state_dir, doc_ids, key_cols=_KEYS, payload_col="sig")

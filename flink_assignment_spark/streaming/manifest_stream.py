@@ -13,7 +13,7 @@ rebuild without them — the integrity audit stays current THROUGH
 deletes, which is the point of pairing it with the RTBF paths.
 
 State is one tiny table (≤ n_buckets rows); the fold is a whole-table
-``backend.replace`` whose meta carries the applied batch id
+``_state.replace`` whose meta carries the applied batch id
 atomically with the data (the mixture/drift contract) — replays skip,
 and there is no crash window in which data and marker disagree."""
 
@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.manifest import N_BUCKETS, _WRAP, corpus_manifest
-from ._state import DEFAULT_BACKEND
+from . import _state
 
 TABLE = "manifest"
 
@@ -42,22 +42,20 @@ def merge_manifest_batch(
     content_cols: list[str],
     sign: int = 1,
     n_buckets: int = N_BUCKETS,
-    backend=None,
 ) -> None:
     """Fold one micro-batch (``sign=+1``) or retraction batch
     (``sign=-1``, e.g. an erasure stream's purged rows) into the live
     manifest."""
     if sign not in (1, -1):
         raise ValueError(f"sign must be +1 or -1, got {sign}")
-    backend = backend or DEFAULT_BACKEND
     spark = batch_df.sparkSession
     path = _path(state_dir)
-    meta = backend.read_meta(path) or {}
+    meta = _state.read_meta(path) or {}
     if int(meta.get("applied", -1)) >= batch_id:
         return
 
     bm = corpus_manifest(batch_df, key_col, content_cols, n_buckets)
-    cur = backend.read(spark, path)
+    cur = _state.read(spark, path)
     if cur is not None:
         both = cur.select("bucket", "n_rows", "digest").unionByName(
             bm.select(
@@ -81,16 +79,15 @@ def merge_manifest_batch(
         .cast("long")
         .alias("digest"),
     ).filter(F.col("n_rows") > 0)
-    backend.replace(
+    _state.replace(
         merged.coalesce(1), path, meta={"applied": int(batch_id)}
     )
 
 
-def read_manifest(spark: SparkSession, state_dir: str, backend=None) -> DataFrame:
+def read_manifest(spark: SparkSession, state_dir: str) -> DataFrame:
     """The live manifest (bucket, n_rows, digest) — compare with a
     batch ``corpus_manifest`` via ``manifest_diff``."""
-    backend = backend or DEFAULT_BACKEND
-    df = backend.read(spark, _path(state_dir))
+    df = _state.read(spark, _path(state_dir))
     if df is None:
         raise ValueError(f"no manifest state at {state_dir}")
     return df
@@ -101,14 +98,13 @@ def incremental_manifest(
     state_dir: str,
     key_col: str,
     content_cols: list[str],
-    backend=None,
     checkpoint: str | None = None,
 ):
     """Start the manifest fold; returns the StreamingQuery. Restart
     over existing state requires a checkpoint (reset batch ids would
     skip folds against the meta's applied high-water)."""
     if checkpoint is None:
-        meta = (backend or DEFAULT_BACKEND).read_meta(_path(state_dir)) or {}
+        meta = _state.read_meta(_path(state_dir)) or {}
         if int(meta.get("applied", -1)) >= 0:
             raise ValueError(
                 f"state dir {state_dir!r} holds a previous run's "
@@ -121,7 +117,7 @@ def incremental_manifest(
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         merge_manifest_batch(
             batch_df, batch_id, state_dir, key_col, content_cols, 1,
-            N_BUCKETS, backend,
+            N_BUCKETS,
         )
 
     w = records.writeStream.outputMode("append").foreachBatch(_sink)

@@ -8,7 +8,7 @@ rates implied by the corpus SO FAR. This module maintains, under a
 
 - ``counts/`` — cumulative per-group doc counts for the weighted
   groups (group-cardinality: a handful of rows, replaced per batch
-  through the backend seam's ``replace`` — the applied-batch marker
+  through ``_state.replace`` — the applied-batch marker
   commits atomically WITH the fold, so a replayed batch can never
   double-count).
 - ``kept/`` — appended kept docs ``(key, group)``. A replay that
@@ -17,11 +17,9 @@ rates implied by the corpus SO FAR. This module maintains, under a
   re-appended rows are byte-identical duplicates —
   :func:`read_kept_mixture` drops them by key.
 
-All state I/O goes through the :class:`~._state.StateBackend` seam
-(round-7 verdict missing-list #2: the kept/ table used to raw-append
-outside the seam, so the snapshot-isolated ManifestStateBackend —
-and any future Delta/Iceberg binding — could not cover the table
-that feeds training-data exports).
+All state I/O goes through the shared store in ``_state`` (the kept/
+table used to raw-append on its own, outside the store's crash
+contracts).
 
 Per batch: fold the batch's group counts into state FIRST, derive
 rates from the post-fold counts, then gate the batch's docs with the
@@ -51,7 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.sampling import uniform_from_key
-from ._state import DEFAULT_BACKEND, ParquetStateBackend
+from . import _state
 
 
 def _counts_path(state_dir: str) -> str:
@@ -62,8 +60,8 @@ def _kept_path(state_dir: str) -> str:
     return os.path.join(state_dir, "kept")
 
 
-def _applied_batch(counts_path: str, backend: ParquetStateBackend) -> int:
-    meta = backend.read_meta(counts_path)
+def _applied_batch(counts_path: str) -> int:
+    meta = _state.read_meta(counts_path)
     return -1 if meta is None else int(meta.get("applied_batch", -1))
 
 
@@ -75,20 +73,18 @@ def merge_mixture_batch(
     key_col: str = "doc_id",
     group_col: str = "lang",
     salt: str = "mix",
-    backend: ParquetStateBackend | None = None,
 ) -> None:
     """Fold one micro-batch into the count state and append its kept
     docs, gated by the post-fold rates."""
-    backend = backend or DEFAULT_BACKEND
     cpath = _counts_path(state_dir)
-    if batch_id <= _applied_batch(cpath, backend):
+    if batch_id <= _applied_batch(cpath):
         return
     spark = batch_df.sparkSession
     os.makedirs(state_dir, exist_ok=True)
 
     weighted = batch_df.filter(F.col(group_col).isin(list(weights)))
     batch_counts = weighted.groupBy(group_col).agg(F.count("*").alias("n"))
-    old = backend.read(spark, cpath)
+    old = _state.read(spark, cpath)
     if old is not None:
         merged_df = (
             old.select(group_col, "n")
@@ -111,13 +107,13 @@ def merge_mixture_batch(
         kept = weighted.join(F.broadcast(rates_df), group_col).filter(
             uniform_from_key(F.col(key_col), salt) < F.col("keep_rate")
         )
-        backend.append(kept.select(key_col, group_col), _kept_path(state_dir), None)
+        _state.append(kept.select(key_col, group_col), _kept_path(state_dir), None)
 
-    # counts fold + marker in one atomic commit through the seam
+    # counts fold + marker in one atomic commit
     out = spark.createDataFrame(
         list(merged.items()), f"{group_col} string, n long"
     )
-    backend.replace(
+    _state.replace(
         out.coalesce(1), cpath, {"applied_batch": int(batch_id)}
     )
 
@@ -129,14 +125,12 @@ def incremental_mixture_rebalance(
     key_col: str = "doc_id",
     group_col: str = "lang",
     salt: str = "mix",
-    backend: ParquetStateBackend | None = None,
 ):
     """Start the rebalancing query; returns the StreamingQuery."""
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         merge_mixture_batch(
             batch_df, batch_id, state_dir, weights, key_col, group_col, salt,
-            backend=backend,
         )
 
     return docs.writeStream.outputMode("append").foreachBatch(_sink).start()
@@ -149,14 +143,13 @@ def read_kept_mixture(
     group_col: str = "lang",
     key_type: str = "long",
     group_type: str = "string",
-    backend: ParquetStateBackend | None = None,
 ) -> DataFrame:
     """The accumulated kept corpus (replay duplicates dropped by key).
     The before-any-data frame is built from the SAME column names and
     types the caller gave ``merge_mixture_batch`` (round-6 advisory:
     it was hardcoded to ``doc_id long, lang string``, mismatching
     non-default streams)."""
-    df = (backend or DEFAULT_BACKEND).read(spark, _kept_path(state_dir))
+    df = _state.read(spark, _kept_path(state_dir))
     if df is None:
         return spark.createDataFrame(
             [], f"{key_col} {key_type}, {group_col} {group_type}"
@@ -168,10 +161,9 @@ def read_mixture_counts(
     spark: SparkSession,
     state_dir: str,
     group_col: str = "lang",
-    backend: ParquetStateBackend | None = None,
 ) -> DataFrame:
     """Cumulative per-group counts: ``(group, n)``."""
-    df = (backend or DEFAULT_BACKEND).read(spark, _counts_path(state_dir))
+    df = _state.read(spark, _counts_path(state_dir))
     if df is None:
         return spark.createDataFrame([], f"{group_col} string, n long")
     return df

@@ -7,14 +7,12 @@ module maintains two tables under a ``foreachBatch`` sink:
 - ``seen/`` — every distinct shingle hash observed so far,
   HASH-BUCKET-PARTITIONED (``bucket = h % n_buckets`` directories).
   Per micro-batch only the buckets that actually receive new shingles
-  are rewritten, through the shared backend seam
-  ``streaming._state.fold_state`` (default: staging-write +
-  per-partition directory swap) — a real incremental upsert shape on
-  plain parquet (the production form is the same call against a
-  Delta/Iceberg ``MERGE INTO`` backend — see the seam contract in
-  ``_state``'s module docstring; the bucket
-  count is the knob that bounds per-batch rewrite volume at corpus
-  scale). Single-writer assumption: one query owns ``state_dir``.
+  are rewritten, through the shared store's
+  ``streaming._state.fold`` (staging-write + per-partition directory
+  swap) — a real incremental upsert shape on plain parquet (the
+  production form is a Delta/Iceberg ``MERGE INTO`` — see the contract
+  in ``_state``'s module docstring; the bucket count is the knob that
+  bounds per-batch rewrite volume at corpus scale). Single-writer assumption: one query owns ``state_dir``.
 - ``stats/`` — one appended row per micro-batch:
   ``(batch_id, n_docs, n_shingles, n_new, novelty_rate)``.
 
@@ -46,7 +44,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.gates import shingle_hash_array
-from ._state import DEFAULT_BACKEND, applied_batch, commit_marker
+from . import _state
+from ._state import applied_batch, commit_marker
 
 N_BUCKETS = 64
 
@@ -65,7 +64,6 @@ def merge_novelty_batch(
     state_dir: str,
     text_col: str = "text",
     id_col: str = "doc_id",
-    backend=None,
 ) -> None:
     """Score one micro-batch against the seen-shingle state, fold its
     new shingles into the state (touched buckets only), then append
@@ -73,7 +71,6 @@ def merge_novelty_batch(
     docstring for the crash/replay contract."""
     if batch_id <= applied_batch(state_dir):
         return
-    backend = backend or DEFAULT_BACKEND
     spark = batch_df.sparkSession
     seen_path, stats_path = _seen_path(state_dir), _stats_path(state_dir)
 
@@ -82,7 +79,7 @@ def merge_novelty_batch(
         .distinct()
         .withColumn("bucket", F.pmod(F.col("h"), F.lit(N_BUCKETS)).cast("int"))
     )
-    seen = backend.read(spark, seen_path, "bucket")
+    seen = _state.read(spark, seen_path, "bucket")
     if seen is not None:
         # the anti-join carries the bucket equi-key, so at scale it is
         # a partition-pruned, co-partitioned probe (only the buckets
@@ -105,10 +102,10 @@ def merge_novelty_batch(
             out = existing.unionByName(new.select("bucket", "h"))
         else:
             out = new.select("bucket", "h")
-        # staging write + per-bucket fold through the backend seam
+        # staging write + per-bucket fold
         # (writing into seen_path while `existing` still reads from it
         # would be a silent read-under-overwrite race)
-        backend.fold(out.select("h", "bucket"), seen_path, "bucket", touched)
+        _state.fold(out.select("h", "bucket"), seen_path, "bucket", touched)
     new.unpersist()
 
     # stats AFTER the state update, marker last (module docstring)
@@ -124,7 +121,7 @@ def merge_novelty_batch(
         ],
         "batch_id long, n_docs long, n_shingles long, n_new long, novelty_rate double",
     )
-    backend.append(stats.coalesce(1), stats_path, None)
+    _state.append(stats.coalesce(1), stats_path, None)
     commit_marker(state_dir, batch_id)
 
 
@@ -133,26 +130,23 @@ def incremental_novelty(
     state_dir: str,
     text_col: str = "text",
     id_col: str = "doc_id",
-    backend=None,
 ):
     """Start the novelty-tracking query; returns the StreamingQuery."""
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_novelty_batch(batch_df, batch_id, state_dir, text_col, id_col, backend)
+        merge_novelty_batch(batch_df, batch_id, state_dir, text_col, id_col)
 
     return docs.writeStream.outputMode("append").foreachBatch(_sink).start()
 
 
-def read_novelty_stats(
-    spark: SparkSession, state_dir: str, backend=None
-) -> DataFrame:
+def read_novelty_stats(spark: SparkSession, state_dir: str) -> DataFrame:
     """The per-batch novelty curve accumulated so far. Duplicate
     ``batch_id`` rows (an at-least-once replay that raced the marker)
     resolve to the max-``n_new`` row — a replay can only under-count
     its own already-merged shingles."""
     from pyspark.sql import Window as W
 
-    raw = (backend or DEFAULT_BACKEND).read(spark, _stats_path(state_dir))
+    raw = _state.read(spark, _stats_path(state_dir))
     rn = F.row_number().over(
         W.partitionBy("batch_id").orderBy(F.col("n_new").desc())
     )

@@ -26,8 +26,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import _state
 from ._state import (
-    DEFAULT_BACKEND,
     applied_batch,
     commit_marker,
     require_restart_checkpoint,
@@ -47,13 +47,11 @@ def merge_edges_batch(
     id_col: str,
     src: str = "src",
     dst: str = "dst",
-    backend=None,
 ) -> None:
     """Fold one micro-batch of edge occurrences (id, src, dst) into
     the id-hash buckets — set union on occurrence id, replay-safe."""
     if batch_id <= applied_batch(state_dir):
         return
-    backend = backend or DEFAULT_BACKEND
     spark = batch_df.sparkSession
     new = batch_df.select(
         F.col(id_col).alias("_id"),
@@ -69,13 +67,13 @@ def merge_edges_batch(
         commit_marker(state_dir, batch_id)
         return
     path = _path(state_dir)
-    state = backend.read(spark, path, "bucket")
+    state = _state.read(spark, path, "bucket")
     if state is not None:
         old = state.filter(F.col("bucket").isin(touched)).select(*new.columns)
         merged = old.unionByName(new).dropDuplicates(["_id"])
     else:
         merged = new
-    backend.fold(merged, path, "bucket", touched)
+    _state.fold(merged, path, "bucket", touched)
     new.unpersist()
     commit_marker(state_dir, batch_id)
 
@@ -85,14 +83,12 @@ def read_pagerank(
     state_dir: str,
     n_iters: int = 5,
     damping_pct: int = 85,
-    backend=None,
 ) -> DataFrame:
     """Ranks over every edge occurrence seen — identical to running
     the batch kernel on the ingested prefix."""
     from ..operators.graph import weighted_pagerank
 
-    backend = backend or DEFAULT_BACKEND
-    st = backend.read(spark, _path(state_dir), "bucket")
+    st = _state.read(spark, _path(state_dir), "bucket")
     if st is None:
         raise ValueError(f"no pagerank edge state at {state_dir}")
     edges = st.groupBy("src", "dst").agg(F.count("*").cast("long").alias("weight"))
@@ -105,7 +101,6 @@ def incremental_pagerank(
     id_col: str,
     src: str = "src",
     dst: str = "dst",
-    backend=None,
     checkpoint: str | None = None,
 ):
     """Start the edge fold; returns the StreamingQuery. Restart over
@@ -114,7 +109,7 @@ def incremental_pagerank(
     require_restart_checkpoint(state_dir, checkpoint)
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_edges_batch(batch_df, batch_id, state_dir, id_col, src, dst, backend)
+        merge_edges_batch(batch_df, batch_id, state_dir, id_col, src, dst)
 
     w = edges.writeStream.outputMode("append").foreachBatch(_sink)
     if checkpoint is not None:

@@ -30,8 +30,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.asof import asof_join
+from . import _state
 from ._state import (
-    DEFAULT_BACKEND,
     applied_batch,
     commit_marker,
     require_restart_checkpoint,
@@ -51,14 +51,12 @@ def merge_pit_batch(
     id_col: str = "event_id",
     user_col: str = "user_id",
     ts_col: str = "ts",
-    backend=None,
 ) -> None:
     """Resolve one micro-batch of facts against the LIVE SCD2
     dimension (which the orchestrator folded first) — the q141 kernel
     verbatim."""
     if batch_id <= applied_batch(state_dir):
         return
-    backend = backend or DEFAULT_BACKEND
     spark = facts.sparkSession
     dim = read_scd2(spark, scd2_state_dir).select(
         F.col("key").alias(user_col),
@@ -84,15 +82,14 @@ def merge_pit_batch(
         F.col("asof_version").cast("int").alias("prior_version"),
         F.lit(int(batch_id)).cast("bigint").alias("batch_id"),
     )
-    backend.append(out.coalesce(8), _results_path(state_dir), None)
+    _state.append(out.coalesce(8), _results_path(state_dir), None)
     commit_marker(state_dir, batch_id)
 
 
-def read_pit_results(spark: SparkSession, state_dir: str, backend=None) -> DataFrame:
+def read_pit_results(spark: SparkSession, state_dir: str) -> DataFrame:
     """All resolved lookups so far — replay duplicates dropped by
     event id (re-derived rows are identical; see module docstring)."""
-    backend = backend or DEFAULT_BACKEND
-    res = backend.read(spark, _results_path(state_dir))
+    res = _state.read(spark, _results_path(state_dir))
     if res is None:
         raise ValueError(f"no pit state at {state_dir}")
     return res.dropDuplicates(["event_id"]).select(
@@ -107,7 +104,6 @@ def incremental_pit(
     id_col: str = "event_id",
     user_col: str = "user_id",
     ts_col: str = "ts",
-    backend=None,
     checkpoint: str | None = None,
 ):
     """Start the PIT lookup query; returns the StreamingQuery. The
@@ -119,7 +115,7 @@ def incremental_pit(
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         merge_pit_batch(
             batch_df, batch_id, state_dir, scd2_state_dir,
-            id_col, user_col, ts_col, backend,
+            id_col, user_col, ts_col,
         )
 
     w = facts.writeStream.outputMode("append").foreachBatch(_sink)

@@ -39,11 +39,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import _state
 from ._state import (
-    DEFAULT_BACKEND,
     applied_batch,
     commit_marker,
-    drop_if_drained,
     require_restart_checkpoint,
 )
 
@@ -90,7 +89,6 @@ def merge_kanon_batch(
     quasi_cols: list[str],
     k: int,
     id_col: str,
-    backend=None,
 ) -> None:
     """Fold one micro-batch through the holdback gate. ``id_col`` is
     the record identity the replay contract leans on: pending is
@@ -100,7 +98,6 @@ def merge_kanon_batch(
     both fences a replay could inflate a group past k early."""
     if batch_id <= applied_batch(state_dir):
         return
-    backend = backend or DEFAULT_BACKEND
     spark = batch_df.sparkSession
     rows = _with_key(batch_df, quasi_cols).cache()
     if rows.limit(1).count() == 0:
@@ -108,7 +105,7 @@ def merge_kanon_batch(
         commit_marker(state_dir, batch_id)
         return
 
-    open_df = backend.read(spark, _open_path(state_dir))
+    open_df = _state.read(spark, _open_path(state_dir))
     open_keys = (
         open_df.select("qkey").distinct() if open_df is not None else None
     )
@@ -128,7 +125,7 @@ def merge_kanon_batch(
     # ADVICE — the crash window between the open append and the
     # pending fold).
     touched = [int(r.bucket) for r in rows.select("bucket").distinct().collect()]
-    pending = backend.read(spark, _pending_path(state_dir), "bucket")
+    pending = _state.read(spark, _pending_path(state_dir), "bucket")
     pend_touched = (
         pending.filter(F.col("bucket").isin(touched))
         .dropDuplicates([id_col])
@@ -173,9 +170,9 @@ def merge_kanon_batch(
     # never create a bare-_SUCCESS parquet dir (unreadable): a batch
     # that releases nothing appends nothing
     if released.limit(1).count():
-        backend.append(released.coalesce(8), _released_path(state_dir), None)
+        _state.append(released.coalesce(8), _released_path(state_dir), None)
     if opening.count():
-        backend.append(
+        _state.append(
             opening.coalesce(1), _open_path(state_dir), None
         )
     # pending rewrite: touched buckets keep only still-closed groups'
@@ -194,9 +191,9 @@ def merge_kanon_batch(
     if open_keys is not None:
         keep = keep.join(F.broadcast(open_keys), "qkey", "left_anti")
     if touched:
-        ppath = _pending_path(state_dir)
-        backend.fold(keep.dropDuplicates([id_col]), ppath, "bucket", touched)
-        drop_if_drained(ppath)
+        _state.fold(
+            keep.dropDuplicates([id_col]), _pending_path(state_dir), "bucket", touched
+        )
     for df in (opening, held, rows):
         df.unpersist()
     if pend_touched is not None:
@@ -204,24 +201,23 @@ def merge_kanon_batch(
     commit_marker(state_dir, batch_id)
 
 
-def read_released(spark: SparkSession, state_dir: str, id_col: str, backend=None) -> DataFrame:
+def read_released(spark: SparkSession, state_dir: str, id_col: str) -> DataFrame:
     """All records released so far (replay duplicates dropped by
     record id — a record releases exactly once per identity). A gate
     that has run but released NOTHING yet has no released/ table — a
     legitimate state, so the caller passes the record schema question
     back to pending; this raises only to flag the truly-absent
     case."""
-    backend = backend or DEFAULT_BACKEND
-    df = backend.read(spark, _released_path(state_dir))
+    df = _state.read(spark, _released_path(state_dir))
     if df is None:
         raise ValueError(f"nothing released yet at {state_dir}")
     return df.dropDuplicates([id_col])
 
 
-def read_pending(spark: SparkSession, state_dir: str, backend=None) -> DataFrame | None:
+def read_pending(spark: SparkSession, state_dir: str) -> DataFrame | None:
     """Held-back records of still-closed groups (None before any
     fold)."""
-    return (backend or DEFAULT_BACKEND).read(
+    return _state.read(
         spark, _pending_path(state_dir), "bucket"
     )
 
@@ -232,7 +228,6 @@ def incremental_kanon(
     quasi_cols: list[str],
     k: int,
     id_col: str,
-    backend=None,
     checkpoint: str | None = None,
 ):
     """Start the holdback gate; returns the StreamingQuery. Restart
@@ -241,9 +236,7 @@ def incremental_kanon(
     require_restart_checkpoint(state_dir, checkpoint)
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_kanon_batch(
-            batch_df, batch_id, state_dir, quasi_cols, k, id_col, backend
-        )
+        merge_kanon_batch(batch_df, batch_id, state_dir, quasi_cols, k, id_col)
 
     w = records.writeStream.outputMode("append").foreachBatch(_sink)
     if checkpoint is not None:

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.scalar import day_str, file_extension, repo_from_url
+from ..functions.scalar import day_str, repo_from_url
 from ..queries import reference as R
 
 EVENT_TS_NAME = "event_ts"
@@ -49,30 +49,13 @@ def question_two_stream(commits: DataFrame) -> DataFrame:
 def question_three_stream(commits: DataFrame) -> DataFrame:
     """Keyed running count (update-mode target): emits the refined
     count per key each micro-batch — Flink's per-element refinement at
-    micro-batch cadence; final values identical."""
-    return (
-        commits.select(F.explode("files").alias("f"))
-        .filter(F.col("f.filename").isNotNull())
-        .withColumn("ext", file_extension(F.col("f.filename")))
-        .filter(F.col("ext").isin("java", "scala"))
-        .groupBy("ext")
-        .agg(F.count("*").alias("count"))
-    )
+    micro-batch cadence; final values identical. The batch plan's
+    event-time projection is unused and pruned."""
+    return R.question_three(commits)
 
 
 def question_four_stream(commits: DataFrame) -> DataFrame:
-    f = F.col("f")
-    return (
-        commits.select(F.explode("files").alias("f"))
-        .filter(f.filename.endswith(".js") | f.filename.endswith(".py"))
-        .select(
-            F.when(f.filename.endswith(".js"), ".js").otherwise(".py").alias("ext"),
-            F.coalesce(f.status, F.lit("unknown")).alias("status"),
-            f.changes.alias("changes"),
-        )
-        .groupBy("ext", "status")
-        .agg(F.sum("changes").alias("sum_changes"))
-    )
+    return R.question_four(commits)
 
 
 def question_five_stream(commits: DataFrame, delay: str = "0 seconds") -> DataFrame:

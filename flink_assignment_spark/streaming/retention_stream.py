@@ -33,8 +33,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import _state
 from ._state import (
-    DEFAULT_BACKEND,
     applied_batch,
     commit_marker,
     require_restart_checkpoint,
@@ -72,13 +72,11 @@ def merge_retention_batch(
     state_dir: str,
     ts_col: str = "ts",
     user_col: str = "user_id",
-    backend=None,
 ) -> None:
     """Fold one micro-batch's distinct (user, week) activity into the
     touched buckets — a set union, so any replay converges."""
     if batch_id <= applied_batch(state_dir):
         return
-    backend = backend or DEFAULT_BACKEND
     spark = batch_df.sparkSession
     new = _user_weeks(batch_df, ts_col, user_col).cache()
     touched = [int(r.bucket) for r in new.select("bucket").distinct().collect()]
@@ -87,7 +85,7 @@ def merge_retention_batch(
         commit_marker(state_dir, batch_id)
         return
     path = _path(state_dir)
-    state = backend.read(spark, path, "bucket")
+    state = _state.read(spark, path, "bucket")
     if state is not None:
         old = state.filter(F.col("bucket").isin(touched)).select(
             "bucket", "user_id", "week"
@@ -97,18 +95,17 @@ def merge_retention_batch(
         )
     else:
         merged = new.select("bucket", "user_id", "week")
-    backend.fold(merged, path, "bucket", touched)
+    _state.fold(merged, path, "bucket", touched)
     new.unpersist()
     commit_marker(state_dir, batch_id)
 
 
-def read_retention(spark: SparkSession, state_dir: str, backend=None) -> DataFrame:
+def read_retention(spark: SparkSession, state_dir: str) -> DataFrame:
     """The retention table over everything seen — identical columns
     and arithmetic to q148 (cohort, weeks_since, n_active,
     cohort_size, retention), derived from the activity state so late
     arrivals (including cohort-moving ones) are already reflected."""
-    backend = backend or DEFAULT_BACKEND
-    st = backend.read(spark, _path(state_dir), "bucket")
+    st = _state.read(spark, _path(state_dir), "bucket")
     if st is None:
         raise ValueError(f"no retention state at {state_dir}")
     weekly = st.select("user_id", "week").distinct()
@@ -133,7 +130,6 @@ def incremental_retention(
     state_dir: str,
     ts_col: str = "ts",
     user_col: str = "user_id",
-    backend=None,
     checkpoint: str | None = None,
 ):
     """Start the retention fold; returns the StreamingQuery. Restart
@@ -142,7 +138,7 @@ def incremental_retention(
     require_restart_checkpoint(state_dir, checkpoint)
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_retention_batch(batch_df, batch_id, state_dir, ts_col, user_col, backend)
+        merge_retention_batch(batch_df, batch_id, state_dir, ts_col, user_col)
 
     w = events.writeStream.outputMode("append").foreachBatch(_sink)
     if checkpoint is not None:

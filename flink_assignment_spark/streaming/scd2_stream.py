@@ -51,8 +51,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import hash60
+from . import _state
 from ._state import (
-    DEFAULT_BACKEND,
     applied_batch,
     commit_marker,
     require_restart_checkpoint,
@@ -81,14 +81,12 @@ def merge_scd2_batch(
     attr_col: str = "event_type",
     ts_col: str = "ts",
     tie_col: str = "event_id",
-    backend=None,
 ) -> None:
     """Apply one micro-batch of changelog events to the interval
     state — see the module docstring for the chain construction and
     the crash/replay contract."""
     if batch_id <= applied_batch(state_dir):
         return
-    backend = backend or DEFAULT_BACKEND
     spark = batch_df.sparkSession
     cur_path, closed_path = _current_path(state_dir), _closed_path(state_dir)
 
@@ -117,7 +115,7 @@ def merge_scd2_batch(
         return
 
     touched = [int(r.bucket) for r in runs.select("bucket").distinct().collect()]
-    state = backend.read(spark, cur_path, "bucket")
+    state = _state.read(spark, cur_path, "bucket")
     if state is not None:
         state = state.filter(F.col("bucket").isin(touched)).cache()
         state.count()
@@ -199,7 +197,7 @@ def merge_scd2_batch(
         "version",
         F.lit(int(batch_id)).cast("bigint").alias("batch_id"),
     )
-    backend.append(closed.coalesce(8), closed_path, None)
+    _state.append(closed.coalesce(8), closed_path, None)
 
     new_open = linked.filter(F.col("valid_to").isNull()).select(
         "key",
@@ -216,21 +214,20 @@ def merge_scd2_batch(
         folded = carried.unionByName(new_open)
     else:
         folded = new_open
-    backend.fold(folded.repartition("bucket"), cur_path, "bucket", touched)
+    _state.fold(folded.repartition("bucket"), cur_path, "bucket", touched)
     linked.unpersist()
     if state is not None:
         state.unpersist()
     commit_marker(state_dir, batch_id)
 
 
-def read_scd2(spark: SparkSession, state_dir: str, backend=None) -> DataFrame:
+def read_scd2(spark: SparkSession, state_dir: str) -> DataFrame:
     """The full SCD2 table: closed intervals (replay duplicates
     dropped on (key, version)) plus the open interval per key
     (``valid_to`` null, ``is_current`` 1) — the same shape batch
     q127 emits."""
-    backend = backend or DEFAULT_BACKEND
-    closed = backend.read(spark, _closed_path(state_dir))
-    current = backend.read(spark, _current_path(state_dir), "bucket")
+    closed = _state.read(spark, _closed_path(state_dir))
+    current = _state.read(spark, _current_path(state_dir), "bucket")
     cols = ["key", "state", "valid_from", "valid_to", "version", "is_current"]
     parts = []
     if closed is not None:
@@ -260,7 +257,6 @@ def incremental_scd2(
     attr_col: str = "event_type",
     ts_col: str = "ts",
     tie_col: str = "event_id",
-    backend=None,
     checkpoint: str | None = None,
 ):
     """Start the interval-maintenance query; returns the
@@ -271,7 +267,7 @@ def incremental_scd2(
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         merge_scd2_batch(
-            batch_df, batch_id, state_dir, key_col, attr_col, ts_col, tie_col, backend
+            batch_df, batch_id, state_dir, key_col, attr_col, ts_col, tie_col
         )
 
     w = events.writeStream.outputMode("append").foreachBatch(_sink)

@@ -45,7 +45,6 @@ def merge_simhash_batch(
     id_col: str = "doc_id",
     max_state_bucket: int | None = None,
     n_pt: int | None = None,
-    backend=None,
     compact_every: int | None = None,
 ) -> None:
     """Detect the batch's verified near-dup pairs against state +
@@ -64,7 +63,6 @@ def merge_simhash_batch(
         score_keep=lambda h: h <= max_hamming,
         max_state_bucket=max_state_bucket,
         n_pt=n_pt,
-        backend=backend,
         compact_every=compact_every,
     )
 
@@ -77,7 +75,6 @@ def incremental_simhash_neardup(
     id_col: str = "doc_id",
     max_state_bucket: int | None = None,
     n_pt: int | None = None,
-    backend=None,
     compact_every: int | None = None,
     checkpoint: str | None = None,
 ):
@@ -97,7 +94,6 @@ def incremental_simhash_neardup(
             id_col,
             max_state_bucket,
             n_pt,
-            backend,
             compact_every,
         )
 
@@ -107,23 +103,16 @@ def incremental_simhash_neardup(
     return w.start()
 
 
-def read_verified_pairs(
-    spark: SparkSession, state_dir: str, backend=None
-) -> DataFrame:
+def read_verified_pairs(spark: SparkSession, state_dir: str) -> DataFrame:
     """Accumulated distinct VERIFIED near-dup pairs (exact Hamming —
     no later verify pass needed)."""
-    return read_pairs(
-        spark, state_dir, "doc_a long, doc_b long, hamming int", backend
-    )
+    return read_pairs(spark, state_dir, "doc_a long, doc_b long, hamming int")
 
 
-def erase_simhash_docs(
-    spark: SparkSession, state_dir: str, doc_ids, backend=None
-) -> None:
+def erase_simhash_docs(spark: SparkSession, state_dir: str, doc_ids) -> None:
     """Right-to-be-forgotten cascade for the SimHash detector's state —
     bit-block bucket memberships, fingerprints, and verified pairs
     (see ``_detector.erase_docs`` for the crash-safe ordering)."""
     from ._detector import erase_docs
 
-    erase_docs(spark, state_dir, doc_ids, key_cols=_KEYS, payload_col="fp",
-               backend=backend)
+    erase_docs(spark, state_dir, doc_ids, key_cols=_KEYS, payload_col="fp")

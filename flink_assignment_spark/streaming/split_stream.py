@@ -59,7 +59,8 @@ from pyspark.sql import functions as F
 
 from ..functions.text import canonical_text, hash60
 from ..operators.sampling import group_split
-from ._state import DEFAULT_BACKEND, applied_batch, commit_marker
+from . import _state
+from ._state import applied_batch, commit_marker
 
 N_BUCKETS = 64
 
@@ -78,7 +79,6 @@ def merge_split_batch(
     state_dir: str,
     text_col: str = "text",
     id_col: str = "doc_id",
-    backend=None,
     source_col: str | None = "source",
 ) -> None:
     """Route one micro-batch: docs whose canonical text matches a
@@ -94,7 +94,6 @@ def merge_split_batch(
     either way)."""
     if batch_id <= applied_batch(state_dir):
         return
-    backend = backend or DEFAULT_BACKEND
     spark = batch_df.sparkSession
     groups_path, assign_path = _groups_path(state_dir), _assign_path(state_dir)
 
@@ -110,7 +109,7 @@ def merge_split_batch(
     ).withColumn(
         "bucket", F.pmod(hash60(F.col("norm_hash")), F.lit(N_BUCKETS)).cast("int")
     )
-    state = backend.read(spark, groups_path, "bucket")
+    state = _state.read(spark, groups_path, "bucket")
     if state is not None:
         # explicit static pruning on the partition column: the probe
         # reads ONLY the bucket directories this batch's keys hash
@@ -153,7 +152,7 @@ def merge_split_batch(
         # without it a 32-task batch appends up to 32×64 tiny files and
         # the per-batch file-listing cost grows linearly with batches
         # (measured: 14.6 → 36.8 s/batch across a 10-batch replay)
-        backend.append(
+        _state.append(
             new_groups.repartition("bucket").select(
                 "norm_hash", "group_id", "split", "bucket"
             ),
@@ -169,7 +168,7 @@ def merge_split_batch(
     )
     # bounded file count per batch (same rationale as the detector's
     # pairs append — the table is read-only until analysis)
-    backend.append(assignments.coalesce(8), assign_path, None)
+    _state.append(assignments.coalesce(8), assign_path, None)
     matched.unpersist()
     fresh.unpersist()
     commit_marker(state_dir, batch_id)
@@ -180,20 +179,17 @@ def incremental_split_assign(
     state_dir: str,
     text_col: str = "text",
     id_col: str = "doc_id",
-    backend=None,
     source_col: str | None = "source",
 ):
     """Start the split-assignment query; returns the StreamingQuery."""
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_split_batch(
-            batch_df, batch_id, state_dir, text_col, id_col, backend, source_col
-        )
+        merge_split_batch(batch_df, batch_id, state_dir, text_col, id_col, source_col)
 
     return docs.writeStream.outputMode("append").foreachBatch(_sink).start()
 
 
-def compact_groups(spark: SparkSession, state_dir: str, backend=None) -> None:
+def compact_groups(spark: SparkSession, state_dir: str) -> None:
     """Out-of-band OPTIMIZE for the delta-appended group map: rewrite
     the accumulated per-batch files as one deduplicated table.
     Duplicate rows (a crash that raced the replay marker re-appended
@@ -201,13 +197,12 @@ def compact_groups(spark: SparkSession, state_dir: str, backend=None) -> None:
     the identical (group_id, split) — so ``distinct()`` is the whole
     merge. Idempotent; safe whenever the owning query is quiesced
     (same single-writer contract as the detector ``compact_state``)."""
-    backend = backend or DEFAULT_BACKEND
     groups_path = _groups_path(state_dir)
-    state = backend.read(spark, groups_path, "bucket")
+    state = _state.read(spark, groups_path, "bucket")
     if state is None:
         return
     all_buckets = [int(r.bucket) for r in state.select("bucket").distinct().collect()]
-    backend.fold(
+    _state.fold(
         state.distinct().select("norm_hash", "group_id", "split", "bucket"),
         groups_path,
         "bucket",
@@ -215,13 +210,11 @@ def compact_groups(spark: SparkSession, state_dir: str, backend=None) -> None:
     )
 
 
-def read_assignments(
-    spark: SparkSession, state_dir: str, backend=None
-) -> DataFrame:
+def read_assignments(spark: SparkSession, state_dir: str) -> DataFrame:
     """Per-doc routing accumulated so far. Duplicate (batch_id,
     doc_id) rows (an at-least-once replay that raced the marker) are
     identical by construction — the replay re-derives the same
     (group_id, split) from state — so a plain dropDuplicates
     resolves them."""
-    raw = (backend or DEFAULT_BACKEND).read(spark, _assign_path(state_dir))
+    raw = _state.read(spark, _assign_path(state_dir))
     return raw.dropDuplicates(["batch_id", "doc_id"])

@@ -61,8 +61,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import doc_shingles
+from . import _state
 from ._state import (
-    DEFAULT_BACKEND,
     applied_batch,
     commit_marker,
     require_restart_checkpoint,
@@ -104,14 +104,12 @@ def merge_ssjoin_batch(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
-    backend=None,
 ) -> None:
     """Match one micro-batch against itself and the postings index,
     then extend the index — see the module docstring for the
     crash/replay contract."""
     if batch_id <= applied_batch(state_dir):
         return
-    backend = backend or DEFAULT_BACKEND
     spark = batch_df.sparkSession
     post_path, pairs_path = _postings_path(state_dir), _pairs_path(state_dir)
 
@@ -141,7 +139,7 @@ def merge_ssjoin_batch(
         F.col("a.n_shingles").alias("na"),
         F.col("b.n_shingles").alias("nb"),
     )
-    state = backend.read(spark, post_path, "bucket")
+    state = _state.read(spark, post_path, "bucket")
     if state is not None:
         # PROBE-SIDE DEDUP is load-bearing, not hygiene: a replayed
         # batch whose crash fell between the postings append and the
@@ -188,10 +186,10 @@ def merge_ssjoin_batch(
     pairs = _pair_jaccard(cand, threshold).withColumn(
         "batch_id", F.lit(int(batch_id)).cast("bigint")
     )
-    backend.append(pairs.coalesce(8), _pairs_path(state_dir), None)
+    _state.append(pairs.coalesce(8), _pairs_path(state_dir), None)
     # insert-only index ⇒ pure delta-append; repartition first so each
     # touched bucket gains ONE file per batch (the linkage/split shape)
-    backend.append(
+    _state.append(
         sh.select(
             "bucket", "h", "doc_id", F.col("n_shingles").alias("ns")
         ).repartition("bucket"),
@@ -202,11 +200,10 @@ def merge_ssjoin_batch(
     commit_marker(state_dir, batch_id)
 
 
-def read_ssjoin_pairs(spark: SparkSession, state_dir: str, backend=None) -> DataFrame:
+def read_ssjoin_pairs(spark: SparkSession, state_dir: str) -> DataFrame:
     """All exact-Jaccard pairs found so far — replay duplicates and
     cross-batch rediscoveries dropped by (doc_a, doc_b)."""
-    backend = backend or DEFAULT_BACKEND
-    pairs = backend.read(spark, _pairs_path(state_dir))
+    pairs = _state.read(spark, _pairs_path(state_dir))
     if pairs is None:
         raise ValueError(f"no ssjoin state at {state_dir}")
     return pairs.dropDuplicates(["doc_a", "doc_b"]).select(
@@ -214,18 +211,17 @@ def read_ssjoin_pairs(spark: SparkSession, state_dir: str, backend=None) -> Data
     )
 
 
-def compact_postings(spark: SparkSession, state_dir: str, backend=None) -> None:
+def compact_postings(spark: SparkSession, state_dir: str) -> None:
     """Out-of-band OPTIMIZE: rewrite the delta-appended postings index
     as one deduplicated table (replayed appends leave exact row
     duplicates, which only fan the probe into pair rows the reader
     already drops)."""
-    backend = backend or DEFAULT_BACKEND
     path = _postings_path(state_dir)
-    cur = backend.read(spark, path, "bucket")
+    cur = _state.read(spark, path, "bucket")
     if cur is None:
         return
     all_buckets = [int(r.bucket) for r in cur.select("bucket").distinct().collect()]
-    backend.fold(
+    _state.fold(
         cur.dropDuplicates(["h", "doc_id"]).select("bucket", "h", "doc_id", "ns"),
         path,
         "bucket",
@@ -240,7 +236,6 @@ def incremental_ssjoin(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
-    backend=None,
     checkpoint: str | None = None,
 ):
     """Start the set-similarity-join query; returns the
@@ -252,7 +247,7 @@ def incremental_ssjoin(
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         merge_ssjoin_batch(
-            batch_df, batch_id, state_dir, threshold, text_col, id_col, n, backend
+            batch_df, batch_id, state_dir, threshold, text_col, id_col, n
         )
 
     w = docs.writeStream.outputMode("append").foreachBatch(_sink)

@@ -25,8 +25,8 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import _state
 from ._state import (
-    DEFAULT_BACKEND,
     applied_batch,
     commit_marker,
     require_restart_checkpoint,
@@ -66,13 +66,11 @@ def merge_tcloseness_batch(
     id_col: str,
     quasi_cols: list[str],
     sensitive: Column,
-    backend=None,
 ) -> None:
     """Fold one micro-batch's projected records into the touched
     buckets (set union on record id — replay-convergent)."""
     if batch_id <= applied_batch(state_dir):
         return
-    backend = backend or DEFAULT_BACKEND
     spark = batch_df.sparkSession
     new = _project(batch_df, id_col, quasi_cols, sensitive).cache()
     touched = [int(r.bucket) for r in new.select("bucket").distinct().collect()]
@@ -81,13 +79,13 @@ def merge_tcloseness_batch(
         commit_marker(state_dir, batch_id)
         return
     path = _path(state_dir)
-    state = backend.read(spark, path, "bucket")
+    state = _state.read(spark, path, "bucket")
     if state is not None:
         old = state.filter(F.col("bucket").isin(touched)).select(*new.columns)
         merged = old.unionByName(new).dropDuplicates(["_id"])
     else:
         merged = new
-    backend.fold(merged, path, "bucket", touched)
+    _state.fold(merged, path, "bucket", touched)
     new.unpersist()
     commit_marker(state_dir, batch_id)
 
@@ -97,14 +95,12 @@ def read_tcloseness(
     state_dir: str,
     quasi_cols: list[str],
     t_frac: tuple[int, int] = (1, 5),
-    backend=None,
 ) -> DataFrame:
     """The exact batch t-closeness audit over everything seen — same
     columns and integer arithmetic as q154."""
     from ..operators.privacy import t_closeness_audit
 
-    backend = backend or DEFAULT_BACKEND
-    st = backend.read(spark, _path(state_dir), "bucket")
+    st = _state.read(spark, _path(state_dir), "bucket")
     if st is None:
         raise ValueError(f"no t-closeness state at {state_dir}")
     return t_closeness_audit(st, quasi_cols, F.col("_v"), t_frac=t_frac)
@@ -116,7 +112,6 @@ def incremental_tcloseness(
     id_col: str,
     quasi_cols: list[str],
     sensitive: Column,
-    backend=None,
     checkpoint: str | None = None,
 ):
     """Start the monitor fold; returns the StreamingQuery. Restart
@@ -126,7 +121,7 @@ def incremental_tcloseness(
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         merge_tcloseness_batch(
-            batch_df, batch_id, state_dir, id_col, quasi_cols, sensitive, backend
+            batch_df, batch_id, state_dir, id_col, quasi_cols, sensitive
         )
 
     w = records.writeStream.outputMode("append").foreachBatch(_sink)

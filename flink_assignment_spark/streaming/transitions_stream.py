@@ -13,7 +13,7 @@ composition is tested: reorder buffer → transitions ≡ batch q145).
 State:
 
 - ``counts/`` — (from_type, to_type, n): event-type-cardinality²
-  rows, so the fold is a whole-table ``backend.replace`` whose meta
+  rows, so the fold is a whole-table ``_state.replace`` whose meta
   carries the applied batch id ATOMICALLY with the data — a replay
   cannot double-add.
 - ``frontier/`` — (bucket, user_id, last_type, last_ts, last_id),
@@ -37,8 +37,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from . import _state
 from ._state import (
-    DEFAULT_BACKEND,
     applied_batch,
     commit_marker,
     require_restart_checkpoint,
@@ -67,13 +67,11 @@ def merge_transitions_batch(
     user_col: str = "user_id",
     type_col: str = "event_type",
     id_col: str = "event_id",
-    backend=None,
 ) -> None:
     """Fold one micro-batch of events (in event-time order per user
     across batches — put a reorder buffer upstream otherwise)."""
     if batch_id <= applied_batch(state_dir):
         return
-    backend = backend or DEFAULT_BACKEND
     spark = batch_df.sparkSession
 
     ev = batch_df.select(
@@ -87,7 +85,7 @@ def merge_transitions_batch(
         commit_marker(state_dir, batch_id)
         return
 
-    frontier = backend.read(spark, _frontier_path(state_dir), "bucket")
+    frontier = _state.read(spark, _frontier_path(state_dir), "bucket")
     touched = [
         int(r.b)
         for r in ev.select(_bucket(F.col("user_id")).alias("b")).distinct().collect()
@@ -125,14 +123,14 @@ def merge_transitions_batch(
     )
 
     cpath = _counts_path(state_dir)
-    meta = backend.read_meta(cpath) or {}
+    meta = _state.read_meta(cpath) or {}
     if int(meta.get("applied", -1)) < batch_id:
-        cur = backend.read(spark, cpath)
+        cur = _state.read(spark, cpath)
         both = delta if cur is None else cur.unionByName(delta)
         merged = both.groupBy("from_type", "to_type").agg(
             F.sum("n").cast("long").alias("n")
         )
-        backend.replace(merged.coalesce(1), cpath, meta={"applied": int(batch_id)})
+        _state.replace(merged.coalesce(1), cpath, meta={"applied": int(batch_id)})
 
     # frontier fold: latest (ts, eid) event per touched user — from
     # the batch alone (the old frontier is never newer than the batch
@@ -156,17 +154,16 @@ def merge_transitions_batch(
             ev.select("user_id").distinct(), "user_id", "left_anti"
         ).select("bucket", "user_id", "last_type", "last_ts", "last_id")
         new_frontier = new_frontier.unionByName(keep)
-    backend.fold(new_frontier, _frontier_path(state_dir), "bucket", touched)
+    _state.fold(new_frontier, _frontier_path(state_dir), "bucket", touched)
     ev.unpersist()
     commit_marker(state_dir, batch_id)
 
 
-def read_transitions(spark: SparkSession, state_dir: str, backend=None) -> DataFrame:
+def read_transitions(spark: SparkSession, state_dir: str) -> DataFrame:
     """q145's output shape: (from_type, to_type, n, prob) with prob
     row-normalized per from_type — identical arithmetic (long/long
     division in double, round 6)."""
-    backend = backend or DEFAULT_BACKEND
-    cur = backend.read(spark, _counts_path(state_dir))
+    cur = _state.read(spark, _counts_path(state_dir))
     if cur is None:
         raise ValueError(f"no transition state at {state_dir}")
     wf = Window.partitionBy("from_type")
@@ -185,7 +182,6 @@ def incremental_transitions(
     user_col: str = "user_id",
     type_col: str = "event_type",
     id_col: str = "event_id",
-    backend=None,
     checkpoint: str | None = None,
 ):
     """Start the transition fold; returns the StreamingQuery. Restart
@@ -195,7 +191,7 @@ def incremental_transitions(
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         merge_transitions_batch(
-            batch_df, batch_id, state_dir, ts_col, user_col, type_col, id_col, backend
+            batch_df, batch_id, state_dir, ts_col, user_col, type_col, id_col
         )
 
     w = events.writeStream.outputMode("append").foreachBatch(_sink)

@@ -80,19 +80,19 @@ def test_crash_after_nth_append_converges(
     merge_simhash_batch(_docs(spark, range(3)), 0, state, max_state_bucket=cap)
 
     calls = {"n": 0}
-    real_append = _state.ParquetStateBackend.append
+    real_append = _state.append
 
-    def crashing_append(self, out, table, part_col):
-        real_append(self, out, table, part_col)
+    def crashing_append(out, table, part_col=None):
+        real_append(out, table, part_col)
         calls["n"] += 1
         if calls["n"] == crash_after_appends:
             raise RuntimeError("simulated crash after append")
 
-    monkeypatch.setattr(_state.ParquetStateBackend, "append", crashing_append)
+    monkeypatch.setattr(_state, "append", crashing_append)
     with pytest.raises(RuntimeError):
         merge_simhash_batch(_docs(spark, range(10, 13)), 1, state,
                             max_state_bucket=cap)
-    monkeypatch.setattr(_state.ParquetStateBackend, "append", real_append)
+    monkeypatch.setattr(_state, "append", real_append)
 
     merge_simhash_batch(_docs(spark, range(10, 13)), 1, state,
                         max_state_bucket=cap)  # redelivery
@@ -156,8 +156,8 @@ def test_mixture_crash_between_kept_append_and_counts_swap(
     want_counts = {tuple(r) for r in read_mixture_counts(spark, ref).collect()}
 
     st = str(tmp_path / "st")
-    # the swap now lives inside the backend seam (_state.replace), so
-    # the crash is injected on the seam module's os.rename
+    # the swap lives inside _state.replace, so the crash is injected on
+    # the store module's os.rename
     real_swap = _state.os.rename
     calls = {"armed": True}
 
@@ -184,7 +184,6 @@ def test_novelty_crash_between_fold_and_stats(spark, tmp_path, monkeypatch):
     stats row UNDER-counts — read_novelty_stats resolves to the
     max-n_new row, which is the correct first-attempt value. The seen
     state itself is a set union and converges exactly."""
-    from flink_assignment_spark.streaming import _state
     from flink_assignment_spark.streaming.novelty_stream import (
         merge_novelty_batch,
         read_novelty_stats,
@@ -202,17 +201,17 @@ def test_novelty_crash_between_fold_and_stats(spark, tmp_path, monkeypatch):
     ]
 
     st = str(tmp_path / "st")
-    real_append = _state.ParquetStateBackend.append
+    real_append = _state.append
 
-    def crash_on_stats(self, out, table, part_col):
+    def crash_on_stats(out, table, part_col=None):
         if table.endswith("stats"):
             raise RuntimeError("crash before stats append")
-        return real_append(self, out, table, part_col)
+        return real_append(out, table, part_col)
 
-    monkeypatch.setattr(_state.ParquetStateBackend, "append", crash_on_stats)
+    monkeypatch.setattr(_state, "append", crash_on_stats)
     with pytest.raises(RuntimeError):
         merge_novelty_batch(docs, 0, st)
-    monkeypatch.setattr(_state.ParquetStateBackend, "append", real_append)
+    monkeypatch.setattr(_state, "append", real_append)
 
     merge_novelty_batch(docs, 0, st)  # redelivery: n_new under-counts...
     got = [
@@ -255,21 +254,19 @@ def test_cap_enabled_replay_does_not_spuriously_saturate(
     merge_simhash_batch(_docs(spark, range(2)), 0, state, max_state_bucket=HIGH_CAP)
 
     if window == "W3":
-        real_append = _state.ParquetStateBackend.append
+        real_append = _state.append
 
-        def crash_after_bucket_append(self, out, table, part_col):
-            real_append(self, out, table, part_col)
+        def crash_after_bucket_append(out, table, part_col=None):
+            real_append(out, table, part_col)
             if table.endswith("buckets"):
                 raise RuntimeError("simulated crash after bucket append")
 
-        monkeypatch.setattr(
-            _state.ParquetStateBackend, "append", crash_after_bucket_append
-        )
+        monkeypatch.setattr(_state, "append", crash_after_bucket_append)
         with pytest.raises(RuntimeError):
             merge_simhash_batch(
                 _docs(spark, range(10, 12)), 1, state, max_state_bucket=HIGH_CAP
             )
-        monkeypatch.setattr(_state.ParquetStateBackend, "append", real_append)
+        monkeypatch.setattr(_state, "append", real_append)
         # the mark never advanced past batch 0 — batch 1's delta is
         # appended but unmarked, so the replay will re-append it
         assert _detector._appended_batch(state) == 0

@@ -126,33 +126,13 @@ def test_kanon_stream_null_quasi_groups_stay_distinct(spark, tmp_path):
     assert pend.select("qkey").distinct().count() == 2
 
 
-class _CrashOnFold:
-    """Backend wrapper: delegates everything, raises on the Nth fold
-    call — the crash window between the open/released appends and the
-    pending rewrite."""
-
-    def __init__(self, inner, crash_on_call: int):
-        self._inner = inner
-        self._n = 0
-        self._crash_on = crash_on_call
-
-    def fold(self, *a, **k):
-        self._n += 1
-        if self._n == self._crash_on:
-            raise RuntimeError("injected crash before the pending fold")
-        return self._inner.fold(*a, **k)
-
-    def __getattr__(self, name):
-        return getattr(self._inner, name)
-
-
-def test_kanon_phantom_holdback_purged_on_all_open_replay(spark, tmp_path):
+def test_kanon_phantom_holdback_purged_on_all_open_replay(spark, tmp_path, monkeypatch):
     """Crash after the open append, before the pending fold; the
     replay's arrivals ALL belong to the now-open group. The purge must
     still run (touched derives from pre-open-filter arrivals), or the
     group's released backlog lingers in pending/ as phantom
     holdbacks."""
-    from flink_assignment_spark.streaming._state import ParquetStateBackend
+    from flink_assignment_spark.streaming import _state
 
     state = tmp_path / "kanon"
     rows0 = [(1, "a", "b")]
@@ -160,12 +140,17 @@ def test_kanon_phantom_holdback_purged_on_all_open_replay(spark, tmp_path):
     merge_kanon_batch(
         spark.createDataFrame(rows0, KSCHEMA), 0, str(state), KQUASI, 2, "rid"
     )
-    crash = _CrashOnFold(ParquetStateBackend(), 1)
+
+    def crash_on_fold(*a, **k):
+        raise RuntimeError("injected crash before the pending fold")
+
+    real_fold = _state.fold
+    monkeypatch.setattr(_state, "fold", crash_on_fold)
     with pytest.raises(RuntimeError, match="injected"):
         merge_kanon_batch(
-            spark.createDataFrame(rows1, KSCHEMA), 1, str(state), KQUASI, 2,
-            "rid", backend=crash,
+            spark.createDataFrame(rows1, KSCHEMA), 1, str(state), KQUASI, 2, "rid"
         )
+    monkeypatch.setattr(_state, "fold", real_fold)
     # replay batch 1: arrivals are all already-open now
     merge_kanon_batch(
         spark.createDataFrame(rows1, KSCHEMA), 1, str(state), KQUASI, 2, "rid"

@@ -8,6 +8,7 @@ import shutil
 
 import pytest
 
+from flink_assignment_spark.streaming import _state
 from flink_assignment_spark.streaming._state import swap_partitions
 from flink_assignment_spark.streaming.dedup_apply import (
     _recover_swap,
@@ -36,7 +37,9 @@ def test_export_lm_refuses_over_cap(spark):
 
 def test_swap_partitions_clears_emptied_partition(spark, tmp_path):
     """A touched partition whose new contents are zero rows must have
-    its stale directory removed, not silently left in place."""
+    its stale directory removed, not silently left in place; a fold
+    that empties EVERY partition drops the table, so it reads as None
+    (not as an unreadable bare ``_SUCCESS`` dir) and folds afresh."""
     table = str(tmp_path / "state")
     df = spark.createDataFrame([(0, "a"), (1, "b")], "pt int, val string")
     swap_partitions(df, table, "pt", [0, 1])
@@ -45,6 +48,12 @@ def test_swap_partitions_clears_emptied_partition(spark, tmp_path):
     df2 = spark.createDataFrame([(1, "c")], "pt int, val string")
     swap_partitions(df2, table, "pt", [0, 1])
     assert {r["val"] for r in spark.read.parquet(table).collect()} == {"c"}
+    # third fold: every touched partition (and so the table) drains
+    empty = spark.createDataFrame([], "pt int, val string")
+    _state.fold(empty, table, "pt", [0, 1])
+    assert _state.read(spark, table, "pt") is None
+    _state.fold(df, table, "pt", [0, 1])
+    assert {r["val"] for r in _state.read(spark, table, "pt").collect()} == {"a", "b"}
 
 
 def test_read_candidate_pairs_empty_state(spark, tmp_path):
@@ -138,29 +147,55 @@ def test_compression_band_expr_null_safe(spark):
     assert row["ratio"] is None and row["raw_bytes"] is None
 
 
-@pytest.mark.parametrize("backend_cls", ["parquet", "manifest"])
-def test_fold_rejects_untouched_partitions_identically(
-    spark, tmp_path, backend_cls
-):
-    """Seam contract (r7 ADVICE): `out` may only contain partitions in
-    `touched`. Both backends must raise the same ValueError — before
-    this, one silently dropped the extra partition's staged rows and
-    the other silently replaced that partition's live files."""
-    from flink_assignment_spark.streaming._state import (
-        ManifestStateBackend,
-        ParquetStateBackend,
-    )
-
-    backend = ParquetStateBackend() if backend_cls == "parquet" else ManifestStateBackend()
+def test_fold_rejects_untouched_partitions(spark, tmp_path):
+    """Fold contract (r7 ADVICE): `out` may only contain partitions in
+    `touched`. A violation raises ValueError before anything moves —
+    neither silently dropping the extra partition's staged rows nor
+    silently replacing that partition's live files."""
     table = str(tmp_path / "tbl")
     df = spark.createDataFrame([(1, 0), (2, 1)], "v long, pt int")
-    backend.fold(df, table, "pt", [0, 1])
+    _state.fold(df, table, "pt", [0, 1])
     bad = spark.createDataFrame([(3, 0), (4, 2)], "v long, pt int")
     with pytest.raises(ValueError, match="fold contract violation"):
-        backend.fold(bad, table, "pt", [0])
+        _state.fold(bad, table, "pt", [0])
     # the rejected fold must not have become visible
-    got = sorted(tuple(r) for r in backend.read(spark, table, "pt").collect())
+    got = sorted(tuple(r) for r in _state.read(spark, table, "pt").collect())
     assert got == [(1, 0), (2, 1)]
+
+
+def test_fold_rejects_non_int_partition_values(spark, tmp_path):
+    """Fold contract: partition values must be ints — the fold guard
+    compares raw directory suffixes, which is only value-faithful for
+    escape-free int values (round-8 advisory)."""
+    df = spark.createDataFrame([("a", 1)], "pt string, v long")
+    with pytest.raises(TypeError, match="must be ints"):
+        _state.fold(df, str(tmp_path / "t"), "pt", ["a"])
+
+
+def test_replace_meta_none_carries_forward(spark, tmp_path):
+    """replace(meta=None) must CARRY the prior meta (round-8 advisory:
+    the replace dropped _meta.json, silently resetting replay
+    protection after any meta-less replace)."""
+    df = spark.createDataFrame([(1,)], "x long")
+    table = str(tmp_path / "meta")
+    _state.replace(df, table, meta={"applied_batch": 7})
+    _state.replace(df, table)  # meta omitted — must not reset
+    assert _state.read_meta(table) == {"applied_batch": 7}
+    _state.replace(df, table, meta={"applied_batch": 8})  # explicit still wins
+    assert _state.read_meta(table) == {"applied_batch": 8}
+
+
+def test_read_kept_fresh_path_semantics(spark, tmp_path):
+    """A never-committed kept table raises a descriptive error, or
+    returns a typed empty frame when the caller supplies the schema
+    (round-8 advisory: the store's None read surfaced as an opaque
+    AttributeError)."""
+    fresh = str(tmp_path / "never_committed")
+    with pytest.raises(FileNotFoundError, match="never been committed"):
+        read_kept(spark, fresh)
+    empty = read_kept(spark, fresh, schema="text_hash string, doc_id long, n_dups long")
+    assert empty.columns == ["text_hash", "doc_id", "n_dups"]
+    assert empty.count() == 0
 
 
 def test_read_bucket_state_empty_schema_matches_folded(spark, tmp_path):

@@ -93,18 +93,17 @@ def test_crash_mid_swap_heals_stale_labels(spark, tmp_path, monkeypatch):
     )
     assert _mapping(spark, state) == {m: m, n: m}
 
-    from flink_assignment_spark.streaming._state import ParquetStateBackend
+    from flink_assignment_spark.streaming import _state
 
     stale_pt = n // cs.PT_RANGE
-    real_fold = ParquetStateBackend.fold
+    real_fold = _state.fold
 
-    def partial_fold(self, out, path, part_col, touched):
+    def partial_fold(out, path, part_col, touched):
         # simulate a crash AFTER a prefix of the partition swaps: the
         # stale partition's directory keeps its old contents (drop it
         # from out AND touched — the fold contract requires out ⊆
         # touched, matching what a real mid-swap crash leaves behind)
         real_fold(
-            self,
             out.filter(F.col(part_col) != stale_pt),
             path,
             part_col,
@@ -112,14 +111,14 @@ def test_crash_mid_swap_heals_stale_labels(spark, tmp_path, monkeypatch):
         )
         raise RuntimeError("simulated crash mid-swap")
 
-    monkeypatch.setattr(ParquetStateBackend, "fold", partial_fold)
+    monkeypatch.setattr(_state, "fold", partial_fold)
     b1 = spark.createDataFrame([(1, m)], PAIRS_SCHEMA)
     try:
         merge_components_batch(b1, 1, state)
         raise AssertionError("crash did not fire")
     except RuntimeError:
         pass
-    monkeypatch.setattr(ParquetStateBackend, "fold", real_fold)
+    monkeypatch.setattr(_state, "fold", real_fold)
     # the half-applied state: 1 and m relabeled, n stranded on label m
     assert _mapping(spark, state) == {1: 1, m: 1, n: m}
 

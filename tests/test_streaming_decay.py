@@ -54,7 +54,7 @@ def test_decay_stream_matches_batch_exactly(spark, tmp_path):
 
 
 def test_decay_compaction_pins_read_and_bounds_state(spark, tmp_path):
-    from flink_assignment_spark.streaming._state import DEFAULT_BACKEND
+    from flink_assignment_spark.streaming import _state
     from flink_assignment_spark.streaming.decay_stream import _counts_path
 
     state = tmp_path / "decay"
@@ -64,7 +64,7 @@ def test_decay_compaction_pins_read_and_bounds_state(spark, tmp_path):
     # sentinel; any read with asof >= horizon is unchanged
     compact_decay(spark, str(state), DECAY_ASOF)
     assert _stream_rows(spark, state) == before
-    counts = DEFAULT_BACKEND.read(spark, _counts_path(str(state)), "bucket")
+    counts = _state.read(spark, _counts_path(str(state)), "bucket")
     per_user = counts.groupBy("user_id").count().agg(F.max("count")).collect()[0][0]
     from flink_assignment_spark.operators.decay_score import DECAY_KCAP
 

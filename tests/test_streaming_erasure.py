@@ -6,6 +6,7 @@ only the touched buckets, and uncheckpointed restarts are refused."""
 from __future__ import annotations
 
 import os
+from datetime import datetime
 
 from pyspark.sql import functions as F
 
@@ -68,6 +69,26 @@ def test_retro_purge_of_live_decay_state(spark, tmp_path):
              for r in read_decay(spark, str(decay_state), DECAY_ASOF).collect()}
     assert victim not in after
     assert after == {u: v for u, v in before.items() if u != victim}
+
+
+def test_purge_of_last_user_leaves_sink_usable(spark, tmp_path):
+    """Purging the ONLY user empties every partition of the decay
+    table. The fold drops the drained table, so the sink reads as
+    empty state and keeps taking batches (a bare ``_SUCCESS`` dir left
+    behind made both the read and the next fold fail to infer a
+    schema)."""
+    decay_state = str(tmp_path / "decay")
+    ev = "user_id long, ts timestamp"
+    day = datetime(2024, 1, 2, 12)
+    merge_decay_batch(spark.createDataFrame([(5, day)], ev), 0, decay_state)
+    er_state = str(tmp_path / "erasure")
+    merge_tombstone_batch(spark.createDataFrame([(5,)], REQ_SCHEMA), 0, er_state)
+    purge_bucketed_state(
+        spark, decay_counts_path(decay_state), "bucket", decay_bucket, er_state
+    )
+    merge_decay_batch(spark.createDataFrame([(9, day)], ev), 1, decay_state)
+    got = read_decay(spark, decay_state, DECAY_ASOF).collect()
+    assert {(r.user_id, r.n_events) for r in got} == {(9, 1)}
 
 
 def test_purge_is_idempotent(spark, tmp_path):
@@ -197,7 +218,7 @@ def test_detector_erase_crash_window_masks_reads(spark, tmp_path):
     erased doc drop at the gate). Simulated by appending the tombstone
     directly without running the purge."""
     from flink_assignment_spark.streaming._detector import doc_tombs_path
-    from flink_assignment_spark.streaming._state import DEFAULT_BACKEND
+    from flink_assignment_spark.streaming import _state
     from flink_assignment_spark.streaming.lsh_stream import merge_lsh_batch
 
     rows = [(r.doc_id, r.text) for r in _lsh_docs(spark, 40).collect()]
@@ -207,7 +228,7 @@ def test_detector_erase_crash_window_masks_reads(spark, tmp_path):
     before = _lsh_pairs(spark, state)
     victim = next(iter(before))[0]
     tomb = spark.createDataFrame([(int(victim),)], "doc_id long")
-    DEFAULT_BACKEND.append(tomb, doc_tombs_path(str(state)), None)
+    _state.append(tomb, doc_tombs_path(str(state)), None)
     after = _lsh_pairs(spark, state)
     assert all(victim not in p[:2] for p in after)
     # a late batch re-delivering the erased doc's text emits nothing
