@@ -38,6 +38,14 @@ patch one name:
   keeper-table state (mixture counts, the dedup-apply kept corpus).
 - ``read_meta(table)`` — the ``meta`` dict committed with the
   current table, or ``None`` before any replace.
+
+The sink lifecycle
+------------------
+
+Every ``incremental_*`` / ``*_stream`` starter is one call to
+``start(stream, sink, applied, checkpoint)``: the writeStream wiring
+and the restart rule (an uncheckpointed start over a durable
+applied-batch marker is refused) live there and nowhere else.
 """
 
 from __future__ import annotations
@@ -46,8 +54,10 @@ import json
 import os
 import shutil
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQuery
 
 
 def applied_batch(state_dir: str, marker: str = "_applied_batch") -> int:
@@ -102,23 +112,35 @@ def next_run_seq(state_dir: str) -> int:
     return nxt
 
 
-def require_restart_checkpoint(state_dir: str, checkpoint: str | None) -> None:
-    """Refuse an uncheckpointed RESTART of a sink whose fold is
-    convergent but not reprocessable (the bucketed detectors): their
-    durable ``_applied_batch`` marker is correct only while batch ids
-    keep increasing, and a checkpoint is what preserves that across
-    restarts. Without one, a restarted query's batch ids reset to 0
-    and every batch ≤ the marker is silently skipped — data loss with
-    no error (the r12 ADVICE class). A FRESH state dir (no marker)
-    with no checkpoint is fine: single-run usage never replays."""
-    if checkpoint is None and applied_batch(state_dir) >= 0:
+def start(
+    stream: DataFrame,
+    sink: Callable[[DataFrame, int], None],
+    applied: int,
+    checkpoint: str | None,
+) -> StreamingQuery:
+    """Start ``stream`` into the foreachBatch ``sink``; returns the
+    StreamingQuery. The one restart rule for every table-state sink.
+
+    ``applied`` is the sink's replay high-water as the caller reads it
+    (marker file, replace meta, or -1 for a per-run marker). A durable
+    marker is correct only while batch ids keep increasing, and a
+    checkpoint is what preserves that across restarts. Without one, a
+    restarted query's batch ids reset to 0 and every batch ≤ the
+    marker is silently skipped — data loss with no error — so an
+    uncheckpointed start over marked state is refused before any
+    stream starts. A FRESH state dir with no checkpoint is fine:
+    single-run usage never replays."""
+    if checkpoint is None and applied >= 0:
         raise ValueError(
-            f"state dir {state_dir!r} holds a previous run's applied-batch "
-            "marker; restarting without a checkpoint would reset batch ids "
-            "to 0 and silently skip every batch the marker already covers — "
-            "pass checkpoint= (resumes source offsets) or use a fresh "
-            "state dir"
+            f"state holds a previous run's applied-batch marker ({applied}); "
+            "restarting without a checkpoint would reset batch ids to 0 and "
+            "silently skip every batch the marker already covers — pass "
+            "checkpoint= (resumes source offsets) or use a fresh state dir"
         )
+    w = stream.writeStream.outputMode("append").foreachBatch(sink)
+    if checkpoint is not None:
+        w = w.option("checkpointLocation", checkpoint)
+    return w.start()
 
 
 def run_marker(checkpoint: str | None) -> str:
@@ -154,9 +176,7 @@ def _check_int_parts(touched: list[int]) -> None:
         )
 
 
-def swap_partitions(
-    out: DataFrame, table_path: str, part_col: str, touched: list[int]
-) -> None:
+def fold(out: DataFrame, table_path: str, part_col: str, touched: list[int]) -> None:
     """Write ``out`` (which must contain ``part_col``) to a staging
     directory partitioned by ``part_col``, then swap ONLY the touched
     partition directories into ``table_path`` — the bounded-rewrite
@@ -208,7 +228,7 @@ def swap_partitions(
         shutil.rmtree(table_path)
 
 
-def append_rows(out: DataFrame, table_path: str, part_col: str | None) -> None:
+def append(out: DataFrame, table_path: str, part_col: str | None = None) -> None:
     """Append ``out`` as new files (partition-pruned when ``part_col``
     is given) — the O(batch) fold for grow-only state, where the swap's
     full-partition rewrite would degenerate to O(state) once a batch
@@ -237,17 +257,6 @@ def recover_replace(table_path: str) -> None:
         if os.path.exists(table_path):
             shutil.rmtree(table_path)
         os.rename(old, table_path)
-
-
-def fold(out: DataFrame, table_path: str, part_col: str, touched: list[int]) -> None:
-    """Replace the ``touched`` partitions with ``out``'s rows (see the
-    module docstring); drops the table when no partition is left."""
-    swap_partitions(out, table_path, part_col, touched)
-
-
-def append(out: DataFrame, table_path: str, part_col: str | None = None) -> None:
-    """Insert ``out``'s rows (see :func:`append_rows`)."""
-    append_rows(out, table_path, part_col)
 
 
 def read(
@@ -299,3 +308,11 @@ def read_meta(table_path: str) -> dict | None:
         return None
     with open(path) as f:
         return json.load(f)
+
+
+def meta_applied_batch(table_path: str, key: str = "applied_batch") -> int:
+    """The batch id committed under ``key`` in the table's
+    :func:`replace` meta, or -1 — the replay marker of the whole-table
+    replace sinks (manifest and transitions store it as ``applied``)."""
+    meta = read_meta(table_path)
+    return -1 if meta is None else int(meta.get(key, -1))

@@ -94,7 +94,7 @@ def ann_probe_stream(
     checkpoint: str | None = None,
 ):
     """Start the streaming ANN probe; returns the StreamingQuery.
-    Pass ``checkpoint`` (a Structured Streaming checkpointLocation)
+    Pass ``checkpoint`` (a Structured Streaming checkpoint directory)
     when the query must survive restarts — the blue/green index swap
     restarts the probe against new artifacts and the checkpoint is
     what lets the restarted query resume the source offsets instead
@@ -109,25 +109,15 @@ def ann_probe_stream(
     run_seq = next_run_seq(state_dir)
     marker = run_marker(checkpoint)
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        probe_ann_batch(
-            batch_df,
-            batch_id,
-            state_dir,
-            centroids,
-            index,
-            k,
-            n_probe,
-            id_col,
-            vec_col,
-            marker,
-            run_seq,
-        )
-
-    w = queries.writeStream.outputMode("append").foreachBatch(_sink)
-    if checkpoint is not None:
-        w = w.option("checkpointLocation", checkpoint)
-    return w.start()
+    return _state.start(
+        queries,
+        lambda df, bid: probe_ann_batch(
+            df, bid, state_dir, centroids, index, k, n_probe, id_col, vec_col,
+            marker, run_seq
+        ),
+        applied_batch(state_dir, marker),
+        checkpoint,
+    )
 
 
 def probe_lsh_batch(
@@ -194,26 +184,15 @@ def lsh_probe_stream(
     run_seq = next_run_seq(state_dir)
     marker = run_marker(checkpoint)
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        probe_lsh_batch(
-            batch_df,
-            batch_id,
-            state_dir,
-            base,
-            k,
-            dim,
-            n_planes,
-            n_tables,
-            id_col,
-            vec_col,
-            marker,
-            run_seq,
-        )
-
-    w = queries.writeStream.outputMode("append").foreachBatch(_sink)
-    if checkpoint is not None:
-        w = w.option("checkpointLocation", checkpoint)
-    return w.start()
+    return _state.start(
+        queries,
+        lambda df, bid: probe_lsh_batch(
+            df, bid, state_dir, base, k, dim, n_planes, n_tables, id_col, vec_col,
+            marker, run_seq
+        ),
+        applied_batch(state_dir, marker),
+        checkpoint,
+    )
 
 
 def read_ann_results(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -303,23 +282,12 @@ def pq_probe_stream(
     run_seq = next_run_seq(state_dir)
     marker = run_marker(checkpoint)
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        probe_pq_batch(
-            batch_df,
-            batch_id,
-            state_dir,
-            codebooks,
-            codes,
-            corpus,
-            k,
-            shortlist_k,
-            id_col,
-            vec_col,
-            marker,
-            run_seq,
-        )
-
-    w = queries.writeStream.outputMode("append").foreachBatch(_sink)
-    if checkpoint is not None:
-        w = w.option("checkpointLocation", checkpoint)
-    return w.start()
+    return _state.start(
+        queries,
+        lambda df, bid: probe_pq_batch(
+            df, bid, state_dir, codebooks, codes, corpus, k, shortlist_k, id_col,
+            vec_col, marker, run_seq
+        ),
+        applied_batch(state_dir, marker),
+        checkpoint,
+    )

@@ -40,7 +40,6 @@ from . import _state
 from ._state import (
     applied_batch,
     commit_marker,
-    require_restart_checkpoint,
 )
 
 N_BUCKETS = 32
@@ -198,12 +197,9 @@ def incremental_anomaly(
     """Start the monitor; returns the StreamingQuery. Restart over
     existing state requires a checkpoint (the shared reset-batch-id
     contract)."""
-    require_restart_checkpoint(state_dir, checkpoint)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_anomaly_batch(batch_df, batch_id, state_dir, ts_col, user_col)
-
-    w = events.writeStream.outputMode("append").foreachBatch(_sink)
-    if checkpoint is not None:
-        w = w.option("checkpointLocation", checkpoint)
-    return w.start()
+    return _state.start(
+        events,
+        lambda df, bid: merge_anomaly_batch(df, bid, state_dir, ts_col, user_col),
+        applied_batch(state_dir),
+        checkpoint,
+    )

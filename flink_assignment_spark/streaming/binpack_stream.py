@@ -43,7 +43,6 @@ from . import _state
 from ._state import (
     applied_batch,
     commit_marker,
-    require_restart_checkpoint,
 )
 
 N_SHARDS = 16
@@ -244,15 +243,11 @@ def incremental_binpack(
     """Start the online packer; returns the StreamingQuery. Restart
     over existing state requires a checkpoint (the shared
     reset-batch-id contract)."""
-    require_restart_checkpoint(state_dir, checkpoint)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_binpack_batch(
-            batch_df, batch_id, state_dir, budget, id_col, text_col,
-            n_tokens_col,
-        )
-
-    w = docs.writeStream.outputMode("append").foreachBatch(_sink)
-    if checkpoint is not None:
-        w = w.option("checkpointLocation", checkpoint)
-    return w.start()
+    return _state.start(
+        docs,
+        lambda df, bid: merge_binpack_batch(
+            df, bid, state_dir, budget, id_col, text_col, n_tokens_col
+        ),
+        applied_batch(state_dir),
+        checkpoint,
+    )

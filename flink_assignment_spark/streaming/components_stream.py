@@ -17,7 +17,7 @@ This sink maintains the (node → component-min) mapping itself under
    uses (driver union-find below its size threshold, distributed star
    contraction above);
 3. rewrite only the node-hash partitions holding relabeled nodes
-   (``streaming._state.swap_partitions``).
+   (``streaming._state.fold``).
 
 Correctness: a component's stored label is its min node id, so the
 local graph contains every node of every component any new edge can
@@ -218,13 +218,16 @@ def incremental_components(
     state_dir: str,
     src_col: str = "doc_a",
     dst_col: str = "doc_b",
+    checkpoint: str | None = None,
 ):
-    """Start the cluster-maintenance query; returns the StreamingQuery."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_components_batch(batch_df, batch_id, state_dir, src_col, dst_col)
-
-    return pairs.writeStream.outputMode("append").foreachBatch(_sink).start()
+    """Start the cluster-maintenance query; returns the StreamingQuery.
+    Restart over existing state requires a checkpoint (``_state.start``)."""
+    return _state.start(
+        pairs,
+        lambda df, bid: merge_components_batch(df, bid, state_dir, src_col, dst_col),
+        applied_batch(state_dir),
+        checkpoint,
+    )
 
 
 def read_components(spark: SparkSession, state_dir: str) -> DataFrame:

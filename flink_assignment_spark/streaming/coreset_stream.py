@@ -40,7 +40,7 @@ replace: center ids/ranks/pick-radii, repr-precision vectors, ``r``,
 deterministic replace (same batch ⇒ same state), so the
 crash-between-write-and-marker window converges on replay; an
 UNCHECKPOINTED restart over existing state is refused
-(``require_restart_checkpoint``) — reset batch ids would silently
+(``_state.start``) — reset batch ids would silently
 skip arrivals, the linkage/scd2/gapfill contract.
 """
 
@@ -53,7 +53,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.coreset import _center_d2_expr, kcenter_select
-from ._state import applied_batch, commit_marker, require_restart_checkpoint
+from . import _state
+from ._state import applied_batch, commit_marker
 
 
 def _centers_path(state_dir: str) -> str:
@@ -233,12 +234,9 @@ def incremental_coreset(
     StreamingQuery. The fold is convergent but not reprocessable under
     reset batch ids, so a restart over existing state requires a
     checkpoint."""
-    require_restart_checkpoint(state_dir, checkpoint)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_coreset_batch(batch_df, batch_id, state_dir, k, id_col, vec_col)
-
-    w = vectors.writeStream.outputMode("append").foreachBatch(_sink)
-    if checkpoint is not None:
-        w = w.option("checkpointLocation", checkpoint)
-    return w.start()
+    return _state.start(
+        vectors,
+        lambda df, bid: merge_coreset_batch(df, bid, state_dir, k, id_col, vec_col),
+        applied_batch(state_dir),
+        checkpoint,
+    )

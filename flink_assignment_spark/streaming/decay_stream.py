@@ -41,7 +41,6 @@ from . import _state
 from ._state import (
     applied_batch,
     commit_marker,
-    require_restart_checkpoint,
 )
 
 N_BUCKETS = 32
@@ -183,12 +182,9 @@ def incremental_decay(
     StreamingQuery. The count fold is convergent but not reprocessable
     under reset batch ids, so a restart over existing state requires a
     checkpoint."""
-    require_restart_checkpoint(state_dir, checkpoint)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_decay_batch(batch_df, batch_id, state_dir, user_col, ts_col)
-
-    w = events.writeStream.outputMode("append").foreachBatch(_sink)
-    if checkpoint is not None:
-        w = w.option("checkpointLocation", checkpoint)
-    return w.start()
+    return _state.start(
+        events,
+        lambda df, bid: merge_decay_batch(df, bid, state_dir, user_col, ts_col),
+        applied_batch(state_dir),
+        checkpoint,
+    )

@@ -36,16 +36,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import _state
-from ._state import recover_replace
-
-# re-exported for backward compatibility (the crash suites imported the
-# healing routine from here before it moved into ``_state``)
-_recover_swap = recover_replace
-
-
-def _applied_batch(table_path: str) -> int:
-    meta = _state.read_meta(table_path)
-    return -1 if meta is None else int(meta.get("applied_batch", -1))
 
 
 def merge_dedup_groups(
@@ -64,7 +54,7 @@ def merge_dedup_groups(
     so a redelivered batch is skipped instead of double-adding its
     ``n_dups`` — after a crash at any point, readers see the previous
     (data, marker) pair or the new one, never a mix."""
-    if batch_id is not None and batch_id <= _applied_batch(table_path):
+    if batch_id is not None and batch_id <= _state.meta_applied_batch(table_path):
         return
     keep_cols = [id_col, *carry_cols]
     new = (
@@ -104,26 +94,24 @@ def incremental_dedup_apply(
     text_col: str = "text",
     id_col: str = "doc_id",
     carry_cols: tuple[str, ...] = (),
+    checkpoint: str | None = None,
 ):
     """Start the maintenance query; returns the StreamingQuery.
+    Restart over existing state requires a checkpoint (``_state.start``).
 
     ``docs`` is the RAW document stream (not pre-deduped): the sink
     aggregates each micro-batch itself so duplicate counts inside a
     batch are captured — feeding it through ``exact_dedup_stream``
     first would lose the per-group sizes.
     """
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_dedup_groups(
-            batch_df,
-            table_path,
-            text_col,
-            id_col,
-            carry_cols,
-            batch_id=batch_id,
-        )
-
-    return docs.writeStream.outputMode("append").foreachBatch(_sink).start()
+    return _state.start(
+        docs,
+        lambda df, bid: merge_dedup_groups(
+            df, table_path, text_col, id_col, carry_cols, batch_id=bid
+        ),
+        _state.meta_applied_batch(table_path),
+        checkpoint,
+    )
 
 
 def read_kept(

@@ -42,11 +42,6 @@ def _report_path(state_dir: str) -> str:
     return os.path.join(state_dir, "report")
 
 
-def _applied_batch(counts_path: str) -> int:
-    meta = _state.read_meta(counts_path)
-    return -1 if meta is None else int(meta.get("applied_batch", -1))
-
-
 def merge_drift_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -63,7 +58,7 @@ def merge_drift_batch(
     cumulative report supersedes (reports are monotone snapshots, not
     deltas)."""
     counts_path = _counts_path(state_dir)
-    if batch_id <= _applied_batch(counts_path):
+    if batch_id <= _state.meta_applied_batch(counts_path):
         return
     spark = batch_df.sparkSession
     from ..operators.drift import window_counts
@@ -124,27 +119,16 @@ def incremental_drift(
 ):
     """Start the drift-monitoring query; returns the StreamingQuery.
 
-    Restart contract (the scd2/gapfill ``require_restart_checkpoint``
-    class): the applied-batch marker lives in the counts meta and is
-    correct only while batch ids keep increasing. An uncheckpointed
-    restart resets batch ids to 0, so every batch ≤ the stale marker
-    would be silently skipped — events lost from the cumulative counts
-    with no error. Refuse it; a fresh state dir or a checkpoint is
-    required.
+    Restart contract (``_state.start``): the applied-batch marker
+    lives in the counts meta and is correct only while batch ids keep
+    increasing. An uncheckpointed restart resets batch ids to 0, so
+    every batch ≤ the stale marker would be silently skipped — events
+    lost from the cumulative counts with no error. It is refused; a
+    fresh state dir or a checkpoint is required.
     """
-    if checkpoint is None and _applied_batch(_counts_path(state_dir)) >= 0:
-        raise ValueError(
-            f"state dir {state_dir!r} holds a previous run's applied-batch "
-            "marker (counts meta); restarting without a checkpoint would "
-            "reset batch ids to 0 and silently skip every batch the marker "
-            "already covers — pass checkpoint= (resumes source offsets) or "
-            "use a fresh state dir"
-        )
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_drift_batch(batch_df, batch_id, state_dir, cutoff, type_col, ts_col)
-
-    w = events.writeStream.outputMode("append").foreachBatch(_sink)
-    if checkpoint is not None:
-        w = w.option("checkpointLocation", checkpoint)
-    return w.start()
+    return _state.start(
+        events,
+        lambda df, bid: merge_drift_batch(df, bid, state_dir, cutoff, type_col, ts_col),
+        _state.meta_applied_batch(_counts_path(state_dir)),
+        checkpoint,
+    )

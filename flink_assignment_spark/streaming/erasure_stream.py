@@ -24,7 +24,7 @@ drop them exactly.
 Replay: tombstone appends may duplicate (deduped at read; an erase is
 idempotent by meaning, not just by mechanism); the marker skips fully
 applied batches; an uncheckpointed restart over existing state is
-refused (require_restart_checkpoint — reset batch ids would silently
+refused (``_state.start`` — reset batch ids would silently
 skip delete requests, the worst possible row to lose).
 """
 
@@ -39,7 +39,6 @@ from . import _state
 from ._state import (
     applied_batch,
     commit_marker,
-    require_restart_checkpoint,
 )
 
 N_BUCKETS = 32
@@ -145,12 +144,9 @@ def incremental_tombstones(
     fold is insert-only (convergent) but not reprocessable under reset
     batch ids, so a restart over existing state requires a
     checkpoint."""
-    require_restart_checkpoint(state_dir, checkpoint)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_tombstone_batch(batch_df, batch_id, state_dir, key_col)
-
-    w = requests.writeStream.outputMode("append").foreachBatch(_sink)
-    if checkpoint is not None:
-        w = w.option("checkpointLocation", checkpoint)
-    return w.start()
+    return _state.start(
+        requests,
+        lambda df, bid: merge_tombstone_batch(df, bid, state_dir, key_col),
+        applied_batch(state_dir),
+        checkpoint,
+    )

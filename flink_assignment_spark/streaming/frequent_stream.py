@@ -40,6 +40,7 @@ import os
 from pyspark.sql import DataFrame
 
 from ..operators.frequent import DEFAULT_PHI_INV, mg_merge_compact, token_stream
+from . import _state
 
 
 def _state_file(state_dir: str) -> str:
@@ -133,13 +134,16 @@ def incremental_heavy_hitters(
     state_dir: str,
     phi_inv: int = DEFAULT_PHI_INV,
     text_col: str = "text",
+    checkpoint: str | None = None,
 ):
-    """Start the maintenance query; returns the StreamingQuery."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_frequent_batch(batch_df, batch_id, state_dir, phi_inv, text_col)
-
-    return docs.writeStream.outputMode("append").foreachBatch(_sink).start()
+    """Start the maintenance query; returns the StreamingQuery.
+    Restart over existing state requires a checkpoint (``_state.start``)."""
+    return _state.start(
+        docs,
+        lambda df, bid: merge_frequent_batch(df, bid, state_dir, phi_inv, text_col),
+        _load(state_dir)["applied_batch"],
+        checkpoint,
+    )
 
 
 def read_heavy_hitters(state_dir: str, phi_inv: int | None = None) -> list[dict]:

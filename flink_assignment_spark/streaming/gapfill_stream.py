@@ -48,7 +48,6 @@ from . import _state
 from ._state import (
     applied_batch,
     commit_marker,
-    require_restart_checkpoint,
 )
 
 N_BUCKETS = 64
@@ -256,15 +255,11 @@ def incremental_gapfill(
     """Start the gap-fill query; returns the StreamingQuery. Refuses
     an uncheckpointed restart over existing state (the frontier swap
     cannot reprocess a reset batch-id sequence)."""
-    require_restart_checkpoint(state_dir, checkpoint)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_gapfill_batch(
-            batch_df, batch_id, state_dir, key_col, ts_col, value_col,
-            tie_col, bucket,
-        )
-
-    w = events.writeStream.outputMode("append").foreachBatch(_sink)
-    if checkpoint is not None:
-        w = w.option("checkpointLocation", checkpoint)
-    return w.start()
+    return _state.start(
+        events,
+        lambda df, bid: merge_gapfill_batch(
+            df, bid, state_dir, key_col, ts_col, value_col, tie_col, bucket
+        ),
+        applied_batch(state_dir),
+        checkpoint,
+    )

@@ -57,7 +57,6 @@ from . import _state
 from ._state import (
     applied_batch,
     commit_marker,
-    require_restart_checkpoint,
 )
 
 N_BUCKETS = 32
@@ -236,14 +235,11 @@ def incremental_generalize(
     """Start the generalize-then-release gate; returns the
     StreamingQuery. Restart over existing state requires a checkpoint
     (the shared reset-batch-id contract)."""
-    require_restart_checkpoint(state_dir, checkpoint)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_generalize_batch(
-            batch_df, batch_id, state_dir, quasi_cols, levels, k, id_col
-        )
-
-    w = records.writeStream.outputMode("append").foreachBatch(_sink)
-    if checkpoint is not None:
-        w = w.option("checkpointLocation", checkpoint)
-    return w.start()
+    return _state.start(
+        records,
+        lambda df, bid: merge_generalize_batch(
+            df, bid, state_dir, quasi_cols, levels, k, id_col
+        ),
+        applied_batch(state_dir),
+        checkpoint,
+    )

@@ -141,23 +141,14 @@ def hard_negatives_stream(
     converges to the identical top-k table."""
     marker = run_marker(checkpoint)
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        mine_negatives_batch(
-            batch_df,
-            batch_id,
-            state_dir,
-            kernel,
-            k,
-            id_col,
-            vec_col,
-            label_col,
-            marker,
-        )
-
-    w = corpus.writeStream.outputMode("append").foreachBatch(_sink)
-    if checkpoint is not None:
-        w = w.option("checkpointLocation", checkpoint)
-    return w.start()
+    return _state.start(
+        corpus,
+        lambda df, bid: mine_negatives_batch(
+            df, bid, state_dir, kernel, k, id_col, vec_col, label_col, marker
+        ),
+        applied_batch(state_dir, marker),
+        checkpoint,
+    )
 
 
 def read_hard_negatives(spark: SparkSession, state_dir: str) -> DataFrame:

@@ -46,7 +46,6 @@ from . import _state
 from ._state import (
     applied_batch,
     commit_marker,
-    require_restart_checkpoint,
 )
 
 N_BUCKETS = 64
@@ -232,12 +231,11 @@ def incremental_linkage(
     silently dropping records from the index and the pair output — so
     a restart requires a checkpoint, like scd2/gapfill.
     """
-    require_restart_checkpoint(state_dir, checkpoint)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_linkage_batch(batch_df, batch_id, state_dir, id_col, name_col, max_dist)
-
-    w = records.writeStream.outputMode("append").foreachBatch(_sink)
-    if checkpoint is not None:
-        w = w.option("checkpointLocation", checkpoint)
-    return w.start()
+    return _state.start(
+        records,
+        lambda df, bid: merge_linkage_batch(
+            df, bid, state_dir, id_col, name_col, max_dist
+        ),
+        applied_batch(state_dir),
+        checkpoint,
+    )

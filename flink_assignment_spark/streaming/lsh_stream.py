@@ -36,8 +36,8 @@ from pyspark.sql import functions as F
 
 from ..functions.text import MINHASH_PERMS
 from ..operators.dedup import band_keys, doc_shingles, minhash_signatures
+from . import _state
 from ._detector import merge_detector_batch, read_pairs
-from ._state import require_restart_checkpoint
 
 N_PERMS = len(MINHASH_PERMS)
 _KEYS = ["band", "key"]
@@ -112,28 +112,18 @@ def incremental_lsh_neardup(
     the durable ``_applied_batch`` marker stays valid across runs —
     the correct pairing for the detector's convergent (not
     re-run-idempotent) fold. Restarting over an EXISTING state dir
-    without one is refused (``_state.require_restart_checkpoint``):
+    without one is refused (``_state.start``):
     the fresh run's batch ids reset to 0 and the durable marker would
     silently skip them all — data loss, not an error (r13 review)."""
-    require_restart_checkpoint(state_dir, checkpoint)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_lsh_batch(
-            batch_df,
-            batch_id,
-            state_dir,
-            text_col,
-            id_col,
-            rows_per_band,
-            max_state_bucket,
-            n_pt,
-            compact_every,
-        )
-
-    w = docs.writeStream.outputMode("append").foreachBatch(_sink)
-    if checkpoint is not None:
-        w = w.option("checkpointLocation", checkpoint)
-    return w.start()
+    return _state.start(
+        docs,
+        lambda df, bid: merge_lsh_batch(
+            df, bid, state_dir, text_col, id_col, rows_per_band, max_state_bucket,
+            n_pt, compact_every
+        ),
+        _state.applied_batch(state_dir),
+        checkpoint,
+    )
 
 
 def read_candidate_pairs(spark: SparkSession, state_dir: str) -> DataFrame:

@@ -50,8 +50,7 @@ def merge_manifest_batch(
         raise ValueError(f"sign must be +1 or -1, got {sign}")
     spark = batch_df.sparkSession
     path = _path(state_dir)
-    meta = _state.read_meta(path) or {}
-    if int(meta.get("applied", -1)) >= batch_id:
+    if _state.meta_applied_batch(path, "applied") >= batch_id:
         return
 
     bm = corpus_manifest(batch_df, key_col, content_cols, n_buckets)
@@ -103,24 +102,11 @@ def incremental_manifest(
     """Start the manifest fold; returns the StreamingQuery. Restart
     over existing state requires a checkpoint (reset batch ids would
     skip folds against the meta's applied high-water)."""
-    if checkpoint is None:
-        meta = _state.read_meta(_path(state_dir)) or {}
-        if int(meta.get("applied", -1)) >= 0:
-            raise ValueError(
-                f"state dir {state_dir!r} holds a previous run's "
-                "applied-batch meta; restarting without a checkpoint would "
-                "reset batch ids to 0 and silently skip every batch the "
-                "meta already covers — pass checkpoint= or use a fresh "
-                "state dir"
-            )
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_manifest_batch(
-            batch_df, batch_id, state_dir, key_col, content_cols, 1,
-            N_BUCKETS,
-        )
-
-    w = records.writeStream.outputMode("append").foreachBatch(_sink)
-    if checkpoint is not None:
-        w = w.option("checkpointLocation", checkpoint)
-    return w.start()
+    return _state.start(
+        records,
+        lambda df, bid: merge_manifest_batch(
+            df, bid, state_dir, key_col, content_cols, 1, N_BUCKETS
+        ),
+        _state.meta_applied_batch(_path(state_dir), "applied"),
+        checkpoint,
+    )

@@ -60,11 +60,6 @@ def _kept_path(state_dir: str) -> str:
     return os.path.join(state_dir, "kept")
 
 
-def _applied_batch(counts_path: str) -> int:
-    meta = _state.read_meta(counts_path)
-    return -1 if meta is None else int(meta.get("applied_batch", -1))
-
-
 def merge_mixture_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -77,7 +72,7 @@ def merge_mixture_batch(
     """Fold one micro-batch into the count state and append its kept
     docs, gated by the post-fold rates."""
     cpath = _counts_path(state_dir)
-    if batch_id <= _applied_batch(cpath):
+    if batch_id <= _state.meta_applied_batch(cpath):
         return
     spark = batch_df.sparkSession
     os.makedirs(state_dir, exist_ok=True)
@@ -125,15 +120,18 @@ def incremental_mixture_rebalance(
     key_col: str = "doc_id",
     group_col: str = "lang",
     salt: str = "mix",
+    checkpoint: str | None = None,
 ):
-    """Start the rebalancing query; returns the StreamingQuery."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_mixture_batch(
-            batch_df, batch_id, state_dir, weights, key_col, group_col, salt,
-        )
-
-    return docs.writeStream.outputMode("append").foreachBatch(_sink).start()
+    """Start the rebalancing query; returns the StreamingQuery.
+    Restart over existing state requires a checkpoint (``_state.start``)."""
+    return _state.start(
+        docs,
+        lambda df, bid: merge_mixture_batch(
+            df, bid, state_dir, weights, key_col, group_col, salt
+        ),
+        _state.meta_applied_batch(_counts_path(state_dir)),
+        checkpoint,
+    )
 
 
 def read_kept_mixture(

@@ -130,13 +130,16 @@ def incremental_novelty(
     state_dir: str,
     text_col: str = "text",
     id_col: str = "doc_id",
+    checkpoint: str | None = None,
 ):
-    """Start the novelty-tracking query; returns the StreamingQuery."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_novelty_batch(batch_df, batch_id, state_dir, text_col, id_col)
-
-    return docs.writeStream.outputMode("append").foreachBatch(_sink).start()
+    """Start the novelty-tracking query; returns the StreamingQuery.
+    Restart over existing state requires a checkpoint (``_state.start``)."""
+    return _state.start(
+        docs,
+        lambda df, bid: merge_novelty_batch(df, bid, state_dir, text_col, id_col),
+        applied_batch(state_dir),
+        checkpoint,
+    )
 
 
 def read_novelty_stats(spark: SparkSession, state_dir: str) -> DataFrame:

@@ -30,7 +30,6 @@ from . import _state
 from ._state import (
     applied_batch,
     commit_marker,
-    require_restart_checkpoint,
 )
 
 N_BUCKETS = 32
@@ -106,12 +105,9 @@ def incremental_pagerank(
     """Start the edge fold; returns the StreamingQuery. Restart over
     existing state requires a checkpoint (the shared reset-batch-id
     contract)."""
-    require_restart_checkpoint(state_dir, checkpoint)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_edges_batch(batch_df, batch_id, state_dir, id_col, src, dst)
-
-    w = edges.writeStream.outputMode("append").foreachBatch(_sink)
-    if checkpoint is not None:
-        w = w.option("checkpointLocation", checkpoint)
-    return w.start()
+    return _state.start(
+        edges,
+        lambda df, bid: merge_edges_batch(df, bid, state_dir, id_col, src, dst),
+        applied_batch(state_dir),
+        checkpoint,
+    )

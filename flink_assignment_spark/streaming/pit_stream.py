@@ -34,7 +34,6 @@ from . import _state
 from ._state import (
     applied_batch,
     commit_marker,
-    require_restart_checkpoint,
 )
 from .scd2_stream import read_scd2
 
@@ -110,15 +109,11 @@ def incremental_pit(
     append fold is replay-idempotent but not reprocessable under reset
     batch ids, so a restart over existing state requires a
     checkpoint."""
-    require_restart_checkpoint(state_dir, checkpoint)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_pit_batch(
-            batch_df, batch_id, state_dir, scd2_state_dir,
-            id_col, user_col, ts_col,
-        )
-
-    w = facts.writeStream.outputMode("append").foreachBatch(_sink)
-    if checkpoint is not None:
-        w = w.option("checkpointLocation", checkpoint)
-    return w.start()
+    return _state.start(
+        facts,
+        lambda df, bid: merge_pit_batch(
+            df, bid, state_dir, scd2_state_dir, id_col, user_col, ts_col
+        ),
+        applied_batch(state_dir),
+        checkpoint,
+    )

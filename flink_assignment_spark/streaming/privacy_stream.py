@@ -43,7 +43,6 @@ from . import _state
 from ._state import (
     applied_batch,
     commit_marker,
-    require_restart_checkpoint,
 )
 
 N_BUCKETS = 32
@@ -233,12 +232,9 @@ def incremental_kanon(
     """Start the holdback gate; returns the StreamingQuery. Restart
     over existing state requires a checkpoint (the shared
     reset-batch-id contract)."""
-    require_restart_checkpoint(state_dir, checkpoint)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_kanon_batch(batch_df, batch_id, state_dir, quasi_cols, k, id_col)
-
-    w = records.writeStream.outputMode("append").foreachBatch(_sink)
-    if checkpoint is not None:
-        w = w.option("checkpointLocation", checkpoint)
-    return w.start()
+    return _state.start(
+        records,
+        lambda df, bid: merge_kanon_batch(df, bid, state_dir, quasi_cols, k, id_col),
+        applied_batch(state_dir),
+        checkpoint,
+    )

@@ -37,7 +37,6 @@ from . import _state
 from ._state import (
     applied_batch,
     commit_marker,
-    require_restart_checkpoint,
 )
 
 N_BUCKETS = 32
@@ -135,12 +134,9 @@ def incremental_retention(
     """Start the retention fold; returns the StreamingQuery. Restart
     over existing state requires a checkpoint (the shared
     reset-batch-id contract)."""
-    require_restart_checkpoint(state_dir, checkpoint)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_retention_batch(batch_df, batch_id, state_dir, ts_col, user_col)
-
-    w = events.writeStream.outputMode("append").foreachBatch(_sink)
-    if checkpoint is not None:
-        w = w.option("checkpointLocation", checkpoint)
-    return w.start()
+    return _state.start(
+        events,
+        lambda df, bid: merge_retention_batch(df, bid, state_dir, ts_col, user_col),
+        applied_batch(state_dir),
+        checkpoint,
+    )

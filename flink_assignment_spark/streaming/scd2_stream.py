@@ -12,7 +12,7 @@ under ``foreachBatch``:
   ``(bucket, key, state, valid_from, version, as_of_batch)``,
   hash-bucket-partitioned. UPSERT state (an open interval is replaced
   when it closes), folded by swapping only the touched bucket
-  directories (``_state.swap_partitions`` — the bounded-rewrite MERGE
+  directories (``_state.fold`` — the bounded-rewrite MERGE
   stand-in).
 - ``closed/`` — append-only closed intervals:
   ``(key, state, valid_from, valid_to, version, batch_id)``. A key's
@@ -31,7 +31,7 @@ replayed computation (their closed rows are guaranteed present —
 closed-append strictly precedes any swap), so the fold converges
 instead of double-advancing versions. Like the detector streams, an
 UNCHECKPOINTED restart over existing state is refused
-(``require_restart_checkpoint``): a reset batch-id sequence would
+(``_state.start``): a reset batch-id sequence would
 replay history into a state that has already consumed it.
 
 In-order contract (shared with the other streaming twins): events
@@ -55,7 +55,6 @@ from . import _state
 from ._state import (
     applied_batch,
     commit_marker,
-    require_restart_checkpoint,
 )
 
 N_BUCKETS = 64
@@ -263,14 +262,11 @@ def incremental_scd2(
     StreamingQuery. Refuses an uncheckpointed restart over existing
     state — the swap fold cannot reprocess a reset batch-id sequence
     (same contract as the detector streams)."""
-    require_restart_checkpoint(state_dir, checkpoint)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_scd2_batch(
-            batch_df, batch_id, state_dir, key_col, attr_col, ts_col, tie_col
-        )
-
-    w = events.writeStream.outputMode("append").foreachBatch(_sink)
-    if checkpoint is not None:
-        w = w.option("checkpointLocation", checkpoint)
-    return w.start()
+    return _state.start(
+        events,
+        lambda df, bid: merge_scd2_batch(
+            df, bid, state_dir, key_col, attr_col, ts_col, tie_col
+        ),
+        applied_batch(state_dir),
+        checkpoint,
+    )

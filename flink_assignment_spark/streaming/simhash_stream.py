@@ -30,8 +30,8 @@ from ..operators.dedup import (
     blocked_fingerprints,
     simhash_fingerprints,
 )
+from . import _state
 from ._detector import merge_detector_batch, read_pairs
-from ._state import require_restart_checkpoint
 
 _KEYS = ["blk", "val"]
 
@@ -81,26 +81,16 @@ def incremental_simhash_neardup(
     """Start the streaming near-dup query; returns the StreamingQuery.
     Restarting over an existing state dir REQUIRES ``checkpoint`` —
     the detector's durable replay marker is only valid while batch ids
-    keep increasing (see ``_state.require_restart_checkpoint``)."""
-    require_restart_checkpoint(state_dir, checkpoint)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_simhash_batch(
-            batch_df,
-            batch_id,
-            state_dir,
-            max_hamming,
-            text_col,
-            id_col,
-            max_state_bucket,
-            n_pt,
-            compact_every,
-        )
-
-    w = docs.writeStream.outputMode("append").foreachBatch(_sink)
-    if checkpoint is not None:
-        w = w.option("checkpointLocation", checkpoint)
-    return w.start()
+    keep increasing (see ``_state.start``)."""
+    return _state.start(
+        docs,
+        lambda df, bid: merge_simhash_batch(
+            df, bid, state_dir, max_hamming, text_col, id_col, max_state_bucket,
+            n_pt, compact_every
+        ),
+        _state.applied_batch(state_dir),
+        checkpoint,
+    )
 
 
 def read_verified_pairs(spark: SparkSession, state_dir: str) -> DataFrame:

@@ -180,13 +180,18 @@ def incremental_split_assign(
     text_col: str = "text",
     id_col: str = "doc_id",
     source_col: str | None = "source",
+    checkpoint: str | None = None,
 ):
-    """Start the split-assignment query; returns the StreamingQuery."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_split_batch(batch_df, batch_id, state_dir, text_col, id_col, source_col)
-
-    return docs.writeStream.outputMode("append").foreachBatch(_sink).start()
+    """Start the split-assignment query; returns the StreamingQuery.
+    Restart over existing state requires a checkpoint (``_state.start``)."""
+    return _state.start(
+        docs,
+        lambda df, bid: merge_split_batch(
+            df, bid, state_dir, text_col, id_col, source_col
+        ),
+        applied_batch(state_dir),
+        checkpoint,
+    )
 
 
 def compact_groups(spark: SparkSession, state_dir: str) -> None:

@@ -65,7 +65,6 @@ from . import _state
 from ._state import (
     applied_batch,
     commit_marker,
-    require_restart_checkpoint,
 )
 
 N_BUCKETS = 64
@@ -243,14 +242,11 @@ def incremental_ssjoin(
     NOT reprocessable under reset batch ids, so a restart over
     existing state requires a checkpoint, like linkage/scd2/gapfill.
     """
-    require_restart_checkpoint(state_dir, checkpoint)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_ssjoin_batch(
-            batch_df, batch_id, state_dir, threshold, text_col, id_col, n
-        )
-
-    w = docs.writeStream.outputMode("append").foreachBatch(_sink)
-    if checkpoint is not None:
-        w = w.option("checkpointLocation", checkpoint)
-    return w.start()
+    return _state.start(
+        docs,
+        lambda df, bid: merge_ssjoin_batch(
+            df, bid, state_dir, threshold, text_col, id_col, n
+        ),
+        applied_batch(state_dir),
+        checkpoint,
+    )

@@ -29,7 +29,6 @@ from . import _state
 from ._state import (
     applied_batch,
     commit_marker,
-    require_restart_checkpoint,
 )
 
 N_BUCKETS = 32
@@ -117,14 +116,11 @@ def incremental_tcloseness(
     """Start the monitor fold; returns the StreamingQuery. Restart
     over existing state requires a checkpoint (the shared
     reset-batch-id contract)."""
-    require_restart_checkpoint(state_dir, checkpoint)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_tcloseness_batch(
-            batch_df, batch_id, state_dir, id_col, quasi_cols, sensitive
-        )
-
-    w = records.writeStream.outputMode("append").foreachBatch(_sink)
-    if checkpoint is not None:
-        w = w.option("checkpointLocation", checkpoint)
-    return w.start()
+    return _state.start(
+        records,
+        lambda df, bid: merge_tcloseness_batch(
+            df, bid, state_dir, id_col, quasi_cols, sensitive
+        ),
+        applied_batch(state_dir),
+        checkpoint,
+    )

@@ -41,7 +41,6 @@ from . import _state
 from ._state import (
     applied_batch,
     commit_marker,
-    require_restart_checkpoint,
 )
 
 N_BUCKETS = 16
@@ -123,8 +122,7 @@ def merge_transitions_batch(
     )
 
     cpath = _counts_path(state_dir)
-    meta = _state.read_meta(cpath) or {}
-    if int(meta.get("applied", -1)) < batch_id:
+    if _state.meta_applied_batch(cpath, "applied") < batch_id:
         cur = _state.read(spark, cpath)
         both = delta if cur is None else cur.unionByName(delta)
         merged = both.groupBy("from_type", "to_type").agg(
@@ -187,14 +185,11 @@ def incremental_transitions(
     """Start the transition fold; returns the StreamingQuery. Restart
     over existing state requires a checkpoint (the shared
     reset-batch-id contract)."""
-    require_restart_checkpoint(state_dir, checkpoint)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_transitions_batch(
-            batch_df, batch_id, state_dir, ts_col, user_col, type_col, id_col
-        )
-
-    w = events.writeStream.outputMode("append").foreachBatch(_sink)
-    if checkpoint is not None:
-        w = w.option("checkpointLocation", checkpoint)
-    return w.start()
+    return _state.start(
+        events,
+        lambda df, bid: merge_transitions_batch(
+            df, bid, state_dir, ts_col, user_col, type_col, id_col
+        ),
+        applied_batch(state_dir),
+        checkpoint,
+    )

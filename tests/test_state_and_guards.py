@@ -3,15 +3,18 @@ empty-partition edges and the driver-collect refusal guards."""
 
 from __future__ import annotations
 
+import ast
+import importlib
+import json
 import os
 import shutil
 
 import pytest
+from pyspark.sql import functions as F
 
 from flink_assignment_spark.streaming import _state
-from flink_assignment_spark.streaming._state import swap_partitions
+from flink_assignment_spark.streaming._state import recover_replace
 from flink_assignment_spark.streaming.dedup_apply import (
-    _recover_swap,
     merge_dedup_groups,
     read_kept,
 )
@@ -42,11 +45,11 @@ def test_swap_partitions_clears_emptied_partition(spark, tmp_path):
     (not as an unreadable bare ``_SUCCESS`` dir) and folds afresh."""
     table = str(tmp_path / "state")
     df = spark.createDataFrame([(0, "a"), (1, "b")], "pt int, val string")
-    swap_partitions(df, table, "pt", [0, 1])
+    _state.fold(df, table, "pt", [0, 1])
     assert {r["val"] for r in spark.read.parquet(table).collect()} == {"a", "b"}
     # second fold: partition 0 is touched but now empty, 1 gets "c"
     df2 = spark.createDataFrame([(1, "c")], "pt int, val string")
-    swap_partitions(df2, table, "pt", [0, 1])
+    _state.fold(df2, table, "pt", [0, 1])
     assert {r["val"] for r in spark.read.parquet(table).collect()} == {"c"}
     # third fold: every touched partition (and so the table) drains
     empty = spark.createDataFrame([], "pt int, val string")
@@ -84,13 +87,13 @@ def test_dedup_apply_two_rename_swap_recovery(spark, tmp_path):
     # crash window A: table renamed aside, staging not yet renamed in
     shutil.copytree(table, table + ".old")
     shutil.rmtree(table)
-    _recover_swap(table)
+    recover_replace(table)
     assert _kept_rows(spark, table) == {(1, 2), (3, 1)}
     assert not os.path.exists(table + ".old")
 
     # crash window B: staging renamed in, stale .old not yet deleted
     shutil.copytree(table, table + ".old")
-    _recover_swap(table)
+    recover_replace(table)
     assert _kept_rows(spark, table) == {(1, 2), (3, 1)}
     assert not os.path.exists(table + ".old")
 
@@ -133,6 +136,123 @@ def test_detector_refold_without_marker_converges(spark, tmp_path):
     }
     pairs2 = {tuple(r) for r in read_verified_pairs(spark, state).collect()}
     assert rows1 == rows2 and pairs1 == pairs2
+
+
+def _marker_file(spark, state_dir):
+    _state.commit_marker(state_dir, 0)
+
+
+def _replace_meta(table=None, key="applied_batch"):
+    def write(spark, state_dir):
+        path = state_dir if table is None else os.path.join(state_dir, table)
+        _state.replace(spark.range(1), path, {key: 0})
+
+    return write
+
+
+def _frequent_json(spark, state_dir):
+    from flink_assignment_spark.streaming.frequent_stream import _load, _state_file
+
+    state = {**_load(state_dir), "applied_batch": 0}
+    os.makedirs(state_dir, exist_ok=True)
+    with open(_state_file(state_dir), "w") as f:
+        json.dump(state, f)
+
+
+# every starter whose sink keeps a durable replay marker, as (module,
+# starter, extra positional args, the sink's own marker writer); args
+# that build Columns are a callable, since a Column needs a session
+_STARTERS = {
+    "anomaly": ("anomaly_stream", "incremental_anomaly", (), _marker_file),
+    "binpack": ("binpack_stream", "incremental_binpack", (64,), _marker_file),
+    "components": ("components_stream", "incremental_components", (), _marker_file),
+    "coreset": ("coreset_stream", "incremental_coreset", (2,), _marker_file),
+    "decay": ("decay_stream", "incremental_decay", (), _marker_file),
+    "dedup_apply": ("dedup_apply", "incremental_dedup_apply", (), _replace_meta()),
+    "drift": (
+        "drift_stream", "incremental_drift", ("2024-01-01",), _replace_meta("counts")
+    ),
+    "erasure": ("erasure_stream", "incremental_tombstones", (), _marker_file),
+    "frequent": ("frequent_stream", "incremental_heavy_hitters", (), _frequent_json),
+    "gapfill": ("gapfill_stream", "incremental_gapfill", (), _marker_file),
+    "generalize": (
+        "generalize_stream",
+        "incremental_generalize",
+        lambda: (["id"], [{"id": F.col("id")}], 2, "id"),
+        _marker_file,
+    ),
+    "linkage": ("linkage_stream", "incremental_linkage", (), _marker_file),
+    "lsh": ("lsh_stream", "incremental_lsh_neardup", (), _marker_file),
+    "manifest": (
+        "manifest_stream",
+        "incremental_manifest",
+        ("id", ["id"]),
+        _replace_meta("manifest", "applied"),
+    ),
+    "mixture": (
+        "mixture_stream",
+        "incremental_mixture_rebalance",
+        ({"en": 1.0},),
+        _replace_meta("counts"),
+    ),
+    "novelty": ("novelty_stream", "incremental_novelty", (), _marker_file),
+    "pagerank": ("pagerank_stream", "incremental_pagerank", ("id",), _marker_file),
+    "pit": ("pit_stream", "incremental_pit", ("scd2_state",), _marker_file),
+    "privacy": ("privacy_stream", "incremental_kanon", (["id"], 2, "id"), _marker_file),
+    "retention": ("retention_stream", "incremental_retention", (), _marker_file),
+    "scd2": ("scd2_stream", "incremental_scd2", (), _marker_file),
+    "simhash": ("simhash_stream", "incremental_simhash_neardup", (), _marker_file),
+    "split": ("split_stream", "incremental_split_assign", (), _marker_file),
+    "ssjoin": ("ssjoin_stream", "incremental_ssjoin", (0.5,), _marker_file),
+    "tcloseness": (
+        "tcloseness_stream",
+        "incremental_tcloseness",
+        lambda: ("id", ["id"], F.col("id")),
+        _marker_file,
+    ),
+    "transitions": ("transitions_stream", "incremental_transitions", (), _marker_file),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_STARTERS))
+def test_every_sink_starter_refuses_uncheckpointed_restart(spark, tmp_path, name):
+    """A restarted query without a checkpoint resets batch ids to 0,
+    so over a sink's durable marker every batch ≤ it would be silently
+    skipped. Each starter must refuse that before any stream starts
+    (the ANN/hardneg starters use per-run markers instead; see
+    test_streaming_ann)."""
+    module, starter, args, write_marker = _STARTERS[name]
+    start = getattr(
+        importlib.import_module(f"flink_assignment_spark.streaming.{module}"), starter
+    )
+    state_dir = str(tmp_path / "state")
+    write_marker(spark, state_dir)
+    args = args() if callable(args) else args
+    with pytest.raises(ValueError, match="applied-batch"):
+        start(spark.range(1), state_dir, *args)
+
+
+def test_sink_lifecycle_lives_in_state_start():
+    """The writeStream wiring and the restart rule live in one place:
+    no streaming module but ``_state`` wires a foreachBatch sink or a
+    checkpoint itself, and every starter that goes through
+    ``_state.start`` takes the ``checkpoint`` path."""
+    stream_dir = os.path.dirname(_state.__file__)
+    starters = []
+    for fname in sorted(os.listdir(stream_dir)):
+        if not fname.endswith(".py") or fname == "_state.py":
+            continue
+        with open(os.path.join(stream_dir, fname)) as f:
+            src = f.read()
+        assert ".foreachBatch(" not in src, fname
+        assert "checkpointLocation" not in src, fname
+        for node in ast.walk(ast.parse(src)):
+            if isinstance(node, ast.FunctionDef) and "_state.start(" in (
+                ast.get_source_segment(src, node) or ""
+            ):
+                starters.append(f"{fname}:{node.name}")
+                assert "checkpoint" in [a.arg for a in node.args.args], starters[-1]
+    assert len(starters) == 30, starters
 
 
 def test_compression_band_expr_null_safe(spark):

@@ -8,6 +8,7 @@ from __future__ import annotations
 import os
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from flink_assignment_spark.queries.synthetic import REGISTRY
@@ -79,3 +80,52 @@ def test_streaming_novelty_matches_q78_in_order(spark, tmp_path):
     assert n_seen == sum(r.n_new for r in stats)
     # novelty is monotone-ish sanity: first batch is 100% novel
     assert stats[0].novelty_rate == 1.0
+
+
+def test_checkpointed_restart_folds_new_files(spark, tmp_path):
+    """Restart over existing novelty state: without a checkpoint the
+    restarted query's batch 0 would be ≤ the durable marker and be
+    skipped, losing the new file's shingles without an error — so it
+    is refused; with the checkpoint the source resumes its offsets and
+    the new file lands as the next batch."""
+    schema = "doc_id long, text string"
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    # word 3-shingles: f0 has 2, f1 has 1, f2 has 3 more (all distinct)
+    texts = ["a b c d", "x y z", "p q r s t"]
+    for i, text in enumerate(texts[:2]):
+        spark.createDataFrame([(i, text)], schema).coalesce(1).write.parquet(
+            str(in_dir / f"f{i}")
+        )
+    state_dir = str(tmp_path / "state")
+    ckpt = str(tmp_path / "ckpt")
+
+    def _run(**kw):
+        stream = spark.readStream.schema(schema).parquet(str(in_dir) + "/*")
+        q = incremental_novelty(stream, state_dir, **kw)
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    def _n_seen():
+        return spark.read.parquet(os.path.join(state_dir, "seen")).count()
+
+    _run(checkpoint=ckpt)
+    stats = read_novelty_stats(spark, state_dir).collect()
+    assert [(r.batch_id, r.n_new) for r in stats] == [(0, 3)]
+    assert _n_seen() == 3
+
+    spark.createDataFrame([(2, texts[2])], schema).coalesce(1).write.parquet(
+        str(in_dir / "f2")
+    )
+    stream = spark.readStream.schema(schema).parquet(str(in_dir) + "/*")
+    with pytest.raises(ValueError, match="applied-batch"):
+        incremental_novelty(stream, state_dir)
+    _run(checkpoint=ckpt)
+    stats = read_novelty_stats(spark, state_dir).collect()
+    assert sorted((r.batch_id, r.n_docs, r.n_new) for r in stats) == [
+        (0, 2, 3),
+        (1, 1, 3),
+    ]
+    assert _n_seen() == 6
